@@ -257,8 +257,10 @@ object Bench {
   private[graft] val heavyCount = 40
   private[graft] def heavyLine(ordered: Seq[(String, Double)]): String = {
     val top = ordered.sortBy(-_._2).take(heavyCount).sortBy(_._1)
-    val vals = top.map { case (k, v) => f""""$k":$v%.4f""" }
-      .mkString("{", ",", "}")
+    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
+    val vals = top.map { case (k, v) =>
+      "\"" + k + "\":" + "%.4f".formatLocal(java.util.Locale.ROOT, v)
+    }.mkString("{", ",", "}")
     s"""{"metric":"heavy","values":$vals}"""
   }
 
@@ -516,16 +518,7 @@ object Bench {
     // one-time sweep of scratch dirs left by pre-round-3 runs (before the
     // runRoot shutdown hook existed) so long-lived sandboxes stay tidy
     util.sweepStaleScratch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // install the engine's native functions (cosine_sim) at session build
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus.toInt)
     // JVM/session warmup (codegen, shuffle machinery) so first-query
     // timing reflects the query, not session init
     spark.range(1000000).selectExpr("sum(id)").collect()

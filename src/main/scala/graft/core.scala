@@ -105,8 +105,12 @@ object util {
     * are only sequential because driver code calls them sequentially, so
     * a later job's tasks back-fill executors freed by the current job's
     * straggler tail. Callers guarantee the thunks share no mutable state
-    * (distinct output paths/cursors). Fails fast: the FIRST throwable is
-    * rethrown after every thread finishes (no half-joined threads leak).
+    * (distinct output paths/cursors). Thunks must not scope session conf
+    * ([[GraftSession.withConfs]] or a row that does): the conf is
+    * session-global, so concurrent scopes race and leak each other's
+    * values. Every thread finishes before anything is rethrown (no
+    * half-joined threads leak); the first failure is rethrown with every
+    * further failure attached via `addSuppressed`.
     */
   def inParallel(thunks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -116,7 +120,11 @@ object util {
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(first.addSuppressed(_))
+      throw first
+    }
   }
 
   /** One staging root per JVM run, deleted recursively on exit — queries

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables, util}
+import graft.GraftSession.mountCatalog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -11,8 +12,6 @@ import org.apache.spark.sql.types._
   * chain is preferred in hot paths (codegen, no serialization wall).
   */
 object Extensions {
-
-  private def catalogWarehouse: String = graft.util.catalogWarehouse
 
   val defs: Seq[Q] = Seq(
     Q(
@@ -27,8 +26,7 @@ object Extensions {
       // lands through the same two-phase manifest commit, so the DML
       // surface inherits exactly-once visibility for free.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.priority_rollup")
@@ -113,8 +111,7 @@ object Extensions {
       // SELECT; append inherits two-phase exactly-once). Read-back
       // aggregates both writes; oracle states the union semantics.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         val n = Tables(s, dir, "nation")
           .select(col("n_nationkey").cast("long").as("k"), col("n_name").as("name"))
@@ -1048,8 +1045,7 @@ object Extensions {
       // manifest format. Same oracle as the SQL form: the two MERGE
       // surfaces must agree row-for-row.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.replica_df")
@@ -1127,8 +1123,7 @@ object Extensions {
       // snapshot stays time-travel readable). Oracle: the merge relation
       // recomputed as a FULL JOIN with the same three-way CASE.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.replica")
@@ -1180,8 +1175,7 @@ object Extensions {
       // source's value, inserted rows carry theirs. Oracle: the same
       // relation as a FULL JOIN with name-based star mapping.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.mse")
@@ -1221,8 +1215,7 @@ object Extensions {
       // each in its own atomic snapshot. Cost is O(affected rows); the
       // table is never rewritten.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.upd")
@@ -1253,8 +1246,7 @@ object Extensions {
       // schema_evolution_merge). Old generation = evens without `note`,
       // new generation = odds with it; the oracle recomputes both.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.evo")
@@ -1285,8 +1277,7 @@ object Extensions {
       // insert, v3 = odds insert; the row reads all three pinned
       // snapshots and the oracle recomputes each from the fixture.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.tt_orders")
@@ -1327,8 +1318,7 @@ object Extensions {
       // the flipped main — three membership states, each recomputable
       // from the fixture.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.wap_orders")
@@ -1338,7 +1328,7 @@ object Extensions {
                 |SELECT o_orderkey, o_totalprice FROM orders
                 |WHERE o_orderkey % 2 = 0""".stripMargin)
         // stage the odds on a branch through the connector write option
-        val tblDir = s"$catalogWarehouse/marts/wap_orders"
+        val tblDir = s"${util.catalogWarehouse}/marts/wap_orders"
         graft.Catalog.sql(s, dir,
             """SELECT o_orderkey, o_totalprice FROM orders
               |WHERE o_orderkey % 2 = 1""".stripMargin)

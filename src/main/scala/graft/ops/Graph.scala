@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.GraftSession.withConfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,12 +48,9 @@ object Graph {
     // so the two counts are block-metadata jobs, and the conf is
     // restored before the (checkpointed) result is returned.
     val sess = nodes.sparkSession
-    val widthKey = "spark.sql.shuffle.partitions"
-    val prevWidth = sess.conf.getOption(widthKey)
     val nNodes = labels.count()
     val stateRows = nNodes + e.count()
-    sess.conf.set(widthKey,
-      math.max(4L, (stateRows * 32L) / (32L << 20)).toString)
+    val width = math.max(4L, (stateRows * 32L) / (32L << 20))
     // r17 (guide §3.1, the SCC pattern): checkpointed RDDs carry no stats,
     // so the per-round joins planned as SortMergeJoin — 2 exchanges each.
     // The label table's size IS known (nNodes × 2 longs): when it provably
@@ -63,50 +61,47 @@ object Graph {
     // At a 100 TB node count the condition is false and the shuffled
     // joins return — size-derived, never core-count-derived.
     val bcastLabels = nNodes * 32L < (64L << 20)
-    try {
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val lbl = labels.select(col("doc_id").as("dst"), col("comp").as("nbr"))
-      val step1 = e
-        .join(if (bcastLabels) broadcast(lbl) else lbl, "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("nbr")).as("comp"))
-      // pointer jump: comp ← comp(comp) — halves label-chain length.
-      // LAZY localCheckpoint: the convergence count below is the
-      // materializing action — one job per round instead of two with an
-      // eager checkpoint, while still truncating lineage (a persist()-only
-      // chain keeps the logical plan, which doubles per round and OOMs the
-      // planner; superseded checkpoint blocks are reclaimed by the
-      // ContextCleaner).
-      val jump = step1.select(col("doc_id").as("c2"), col("comp").as("cc"))
-      val step2 = step1
-        .join(if (bcastLabels) broadcast(jump) else jump,
-          col("comp") === col("c2"), "left")
-        .select(col("doc_id"), coalesce(col("cc"), col("comp")).as("comp"))
-        .localCheckpoint(false)
-      // fixpoint check: labels only ever DECREASE, so an unchanged label
-      // sum is exactly the fixpoint (no join against the previous round
-      // needed). The sum runs in DECIMAL(38,0) — exact, and immune to the
-      // ANSI BIGINT-overflow a 100 TB id space could hit — and an empty
-      // node set sums to NULL, which reads as converged instead of the
-      // NPE `.getLong` produced. One driver-side scalar per round.
-      val s = step2.agg(sum(col("comp").cast("decimal(38,0)"))).head
-        .getAs[java.math.BigDecimal](0)
-      converged = s == null || s == prevSum
-      prevSum = s
-      labels = step2
-      iter += 1
-    }
-    // materialize the final lazy checkpoint INSIDE the scoped width, so
-    // no caller action replays a loop subtree at the restored session
-    // width
-    labels.count()
-    labels
-    } finally prevWidth match {
-      case Some(v) => sess.conf.set(widthKey, v)
-      case None    => sess.conf.unset(widthKey)
+    withConfs(sess, Seq("spark.sql.shuffle.partitions" -> width.toString)) {
+      var prevSum: java.math.BigDecimal = null
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val lbl = labels.select(col("doc_id").as("dst"), col("comp").as("nbr"))
+        val step1 = e
+          .join(if (bcastLabels) broadcast(lbl) else lbl, "dst")
+          .groupBy(col("src").as("doc_id"))
+          .agg(min(col("nbr")).as("comp"))
+        // pointer jump: comp ← comp(comp) — halves label-chain length.
+        // LAZY localCheckpoint: the convergence count below is the
+        // materializing action — one job per round instead of two with an
+        // eager checkpoint, while still truncating lineage (a persist()-only
+        // chain keeps the logical plan, which doubles per round and OOMs the
+        // planner; superseded checkpoint blocks are reclaimed by the
+        // ContextCleaner).
+        val jump = step1.select(col("doc_id").as("c2"), col("comp").as("cc"))
+        val step2 = step1
+          .join(if (bcastLabels) broadcast(jump) else jump,
+            col("comp") === col("c2"), "left")
+          .select(col("doc_id"), coalesce(col("cc"), col("comp")).as("comp"))
+          .localCheckpoint(false)
+        // fixpoint check: labels only ever DECREASE, so an unchanged label
+        // sum is exactly the fixpoint (no join against the previous round
+        // needed). The sum runs in DECIMAL(38,0) — exact, and immune to the
+        // ANSI BIGINT-overflow a 100 TB id space could hit — and an empty
+        // node set sums to NULL, which reads as converged instead of the
+        // NPE `.getLong` produced. One driver-side scalar per round.
+        val s = step2.agg(sum(col("comp").cast("decimal(38,0)"))).head
+          .getAs[java.math.BigDecimal](0)
+        converged = s == null || s == prevSum
+        prevSum = s
+        labels = step2
+        iter += 1
+      }
+      // materialize the final lazy checkpoint INSIDE the scoped width, so
+      // no caller action replays a loop subtree at the restored session
+      // width
+      labels.count()
+      labels
     }
   }
 

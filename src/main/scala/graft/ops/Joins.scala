@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables, util}
+import graft.GraftSession.withConfs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -53,24 +54,16 @@ object Joins {
       .orderBy(col("l_orderkey"), col("l_linenumber"))
   }
 
-  /** Scope the runtime-filter configs to `body` and restore after: the
-    * application-side size threshold must drop to 0 at fixture scale (the
-    * default only injects above 10 GB scans — at 100 TB it fires on its
-    * own), and broadcast is disabled so the join is the shuffle join the
-    * bloom filter exists to reduce.
+  /** Fixture-scale confs under which InjectRuntimeFilter fires: the
+    * application-side scan floor must drop to 0 (the default only injects
+    * above 10 GB scans — at 100 TB it fires on its own), and broadcast is
+    * disabled so the join is the shuffle join the bloom filter exists to
+    * reduce. Shared with PlanShapeSpec's plan pins.
     */
-  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, vo) =>
-      vo.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-    }
-  }
+  private[graft] val bloomConfs = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   /** Fixture-scale AQE skew-split triggers for [[skewedSupplierJoin]]: the
     * default 256 MB threshold never fires on toy shuffles, these do (the
@@ -109,24 +102,23 @@ object Joins {
   }
 
   /** Confs for `join_aqe_bhj_conversion`: deny the STATIC planner any
-    * broadcast, allow AQE's runtime-stats threshold — restored after the
-    * body runs (callers must materialize eagerly inside).
+    * broadcast, allow AQE's runtime-stats threshold (callers must
+    * materialize eagerly inside the scope).
     */
-  private[graft] def withAqeBhjConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "8m")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try { confs.foreach { case (k, v) => s.conf.set(k, v) }; body }
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  private[graft] val aqeBhjConfs = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "8m")
+
+  /** Cost-based join reorder on, for the CBO rows. */
+  private val cboConfs = Seq(
+    "spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true")
+
+  private val scriptingConfs = Seq("spark.sql.scripting.enabled" -> "true")
 
   /** The join under test for `join_aqe_bhj_conversion` (also plan-pinned
     * in PlanShapeSpec): dimension join that AQE must convert to a
-    * BroadcastHashJoin at runtime under [[withAqeBhjConfs]].
+    * BroadcastHashJoin at runtime under [[aqeBhjConfs]].
     */
   private[graft] def aqeBhjJoin(s: SparkSession, dir: String) =
     Tables(s, dir, "customer")
@@ -179,7 +171,7 @@ object Joins {
       // point — the oracle certifies the reduction is lossless.
       (s, dir) => {
         val out = util.tempDir("graft_bloomjoin_")
-        withBloomConfs(s) {
+        withConfs(s, bloomConfs) {
           bloomProneJoin(s, dir).write.mode("overwrite").parquet(out)
         }
         s.read.parquet(out).orderBy(col("l_orderkey"), col("l_linenumber"))
@@ -283,16 +275,9 @@ object Joins {
       // over every query on the catalog.
       (s, dir) => {
         cboLand(s, dir)
-        val keep = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-          .map(k => k -> s.conf.getOption(k))
         val out = graft.util.tempDir("graft_cbo_out_")
-        try {
-          s.conf.set("spark.sql.cbo.enabled", "true")
-          s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+        withConfs(s, cboConfs) {
           s.sql(cboStarSql).write.mode("overwrite").parquet(out)
-        } finally keep.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None)    => s.conf.unset(k)
         }
         s.read.parquet(out).orderBy(col("n_name"))
       },
@@ -328,16 +313,9 @@ object Joins {
       // ANALYZE is one scan amortized across the whole catalog.
       (s, dir) => {
         cbo3Land(s, dir)
-        val keep = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-          .map(k => k -> s.conf.getOption(k))
         val out = graft.util.tempDir("graft_cbo3_out_")
-        try {
-          s.conf.set("spark.sql.cbo.enabled", "true")
-          s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+        withConfs(s, cboConfs) {
           s.sql(cbo3StarSql("graft_cbo3a")).write.mode("overwrite").parquet(out)
-        } finally keep.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None)    => s.conf.unset(k)
         }
         s.read.parquet(out).orderBy(col("o_orderpriority"))
       },
@@ -368,7 +346,7 @@ object Joins {
       // might_contain predicate on the lineitem side with the confs on.
       (s, dir) => {
         val out = graft.util.tempDir("graft_rbf_out_")
-        withBloomFilterConfs(s) {
+        withConfs(s, bloomConfs) {
           bloomFilterJoin(s, dir).write.mode("overwrite").parquet(out)
         }
         s.read.parquet(out).orderBy(col("o_orderpriority"))
@@ -397,7 +375,7 @@ object Joins {
       // replica's analytics) into a per-partition merge.
       (s, dir) => {
         val out = graft.util.tempDir("graft_spj_out_")
-        withSpjConfs(s) {
+        withConfs(s, spjConfs) {
           spjJoin(s, dir)
             .groupBy(col("o_orderpriority"))
             .agg(count(lit(1)).as("n_lines"),
@@ -2255,10 +2233,7 @@ object Joins {
       // aggregates. Oracle: the unrolled threshold VALUES list.
       (s, dir) => {
         graft.Catalog.registerAll(s, dir)
-        val key = "spark.sql.scripting.enabled"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key, "true")
+        withConfs(s, scriptingConfs) {
           s.sql(
             """BEGIN
               |  DECLARE szs ARRAY<BIGINT> DEFAULT array();
@@ -2276,9 +2251,6 @@ object Joins {
               |          (t, c) -> named_struct('sz', t, 'c', c))) AS z)
               |  ORDER BY size_floor;
               |END""".stripMargin)
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT CAST(t.sz AS BIGINT) AS size_floor,
@@ -2296,10 +2268,7 @@ object Joins {
       // server-side. Oracle: the equivalent grouped join.
       (s, dir) => {
         graft.Catalog.registerAll(s, dir)
-        val key = "spark.sql.scripting.enabled"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key, "true")
+        withConfs(s, scriptingConfs) {
           s.sql(
             """BEGIN
               |  DECLARE names ARRAY<STRING> DEFAULT array();
@@ -2314,9 +2283,6 @@ object Joins {
               |          (n, c) -> named_struct('nm', n, 'c', c))) AS z)
               |  ORDER BY r_name;
               |END""".stripMargin)
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations
@@ -2335,10 +2301,7 @@ object Joins {
       // moving server-side. Oracle: the unrolled threshold list.
       (s, dir) => {
         graft.Catalog.registerAll(s, dir)
-        val key = "spark.sql.scripting.enabled"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key, "true")
+        withConfs(s, scriptingConfs) {
           s.sql(
             """BEGIN
               |  DECLARE ths ARRAY<BIGINT> DEFAULT array();
@@ -2358,9 +2321,6 @@ object Joins {
               |          (t, c) -> named_struct('th', t, 'cnt', c))) AS z)
               |  ORDER BY threshold DESC;
               |END""".stripMargin)
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT CAST(th AS BIGINT) AS threshold,
@@ -2409,13 +2369,8 @@ object Joins {
       // the result is materialized EAGERLY (localCheckpoint) so the join
       // runs while the confs hold — they are restored before return.
       (s, dir) => {
-        val prev = skewAqeConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-        try {
-          skewAqeConfs.foreach { case (k, v) => s.conf.set(k, v) }
+        withConfs(s, skewAqeConfs) {
           skewedSupplierJoin(s, dir).localCheckpoint(true)
-        } finally prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
         }
       },
       Some(s"""WITH f AS (
@@ -2439,7 +2394,8 @@ object Joins {
       // (localShuffleReader). Materialized eagerly so the join runs
       // while the confs hold (the join_skew_aqe discipline); the result
       // must equal the plain join, broadcast or not.
-      (s, dir) => withAqeBhjConfs(s)(aqeBhjJoin(s, dir).localCheckpoint(true)),
+      (s, dir) =>
+        withConfs(s, aqeBhjConfs)(aqeBhjJoin(s, dir).localCheckpoint(true)),
       Some("""SELECT n_name, count(*) AS n_customers,
              |       CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS BIGINT) AS bal_cents
              |FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -2701,24 +2657,6 @@ object Joins {
     }
   }
 
-  /** Fixture-scale confs under which InjectRuntimeFilter fires: the
-    * app-side scan floor (10 GB default) drops to 0 and broadcast is
-    * disabled so the join shuffles — the shape the rule exists for.
-    * Restores on exit; shared with PlanShapeSpec's plan pin.
-    */
-  private[graft] def withBloomFilterConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val keep = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try { confs.foreach { case (k, v) => s.conf.set(k, v) }; body }
-    finally keep.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
   /** The selective fact-fact join for [[join_runtime_bloom_filter]]:
     * urgent orders (selective creation side) ⋈ lineitem (application
     * side whose scan receives the injected bloom probe).
@@ -2760,21 +2698,13 @@ object Joins {
 
   /** Confs under which Spark matches the two reported partitionings:
     * v2 bucketing on, partial-cluster-key matching allowed, broadcast
-    * off so the join would otherwise shuffle. Restores on exit.
+    * off so the join would otherwise shuffle.
     */
-  private[graft] def withSpjConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val keep = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try { confs.foreach { case (k, v) => s.conf.set(k, v) }; body }
-    finally keep.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+  private[graft] val spjConfs = Seq(
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   /** The bare co-partitioned join for [[join_storage_partitioned]] —
     * PlanShapeSpec pins zero Exchange beneath the SortMergeJoin.

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables, util}
+import graft.GraftSession.{mountCatalog, withConfs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
@@ -883,9 +884,7 @@ object Sources {
       // direct relational replay.
       (s, dir) => {
         val tmp = tmpDir("graft_shred_")
-        withScopedConfs(s, Seq(
-          "spark.sql.variant.writeShredding.enabled" -> "true",
-          "spark.sql.variant.inferShreddingSchema" -> "true")) {
+        withConfs(s, variantShredConfs) {
           Tables.events(s, dir)
             .select(col("event_id"), expr(
               """parse_json(to_json(named_struct(
@@ -933,13 +932,11 @@ object Sources {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"), col("l_returnflag"))
         li.write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
-        val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        try {
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        withConfs(s, Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
           li.filter(col("l_returnflag") === "R")
             .withColumn("l_extendedprice", lit(0.0))
             .write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
-        } finally prev.foreach(s.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+        }
         s.read.parquet(tmp)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"), col("l_returnflag"))
           .orderBy(col("l_orderkey"), col("l_linenumber"))
@@ -1687,8 +1684,7 @@ object Sources {
       // the table: O(changed rows) per sync, with the offset log
       // providing exactly-once delivery.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.cdf")
@@ -1738,8 +1734,7 @@ object Sources {
       // ONCE and O(changes) forever after, with no overlap window to
       // dedup by hand.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.cdf_from")
@@ -1793,8 +1788,7 @@ object Sources {
       // and an out-of-range or expired boundary fails loudly instead of
       // silently under-delivering changes.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.cdf_range")
@@ -1848,8 +1842,7 @@ object Sources {
       // oracle is the identity minus the deleted keys: compaction must
       // be invisible to every reader except the metadata.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.rw")
@@ -1891,8 +1884,7 @@ object Sources {
       // one replica merge; a consumer that was down for N versions
       // passes a wider range, same code path.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         s.sql("DROP TABLE IF EXISTS graft_cat.marts.cdf_src")
@@ -1952,8 +1944,7 @@ object Sources {
       // CDF scans read ONLY the window's files (Round14Spec pins the
       // plan via cdfPlan) and the rollup fold is map-side combinable.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         val fmt = "graft.sources.ManifestSink"
@@ -2076,8 +2067,7 @@ object Sources {
       // join — broadcast the delta side at 100 TB); the base table is
       // never rescanned.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         val fmt = "graft.sources.ManifestSink"
@@ -2158,8 +2148,7 @@ object Sources {
       // lags the fact by one micro-batch, and each batch costs
       // O(|Δ| · fan-out), never a base rescan.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", graft.util.catalogWarehouse)
+        mountCatalog(s)
         graft.Catalog.registerAll(s, dir)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.marts")
         val fmt = "graft.sources.ManifestSink"
@@ -2409,7 +2398,7 @@ object Sources {
       (s, dir) => {
         val src = aggPushdownStage(s, dir)
         val out = tmpDir("graft_aggpd_out_")
-        withScopedConfs(s, aggPushdownConfs) {
+        withConfs(s, aggPushdownConfs) {
           aggPushdownQuery(s, src).write.mode("overwrite").parquet(out)
         }
         s.read.parquet(out).orderBy(col("l_returnflag"))
@@ -2534,17 +2523,16 @@ object Sources {
         min(col("l_shipdate")).as("min_sd"),
         max(col("l_shipdate")).as("max_sd"))
 
-  /** Set confs, run the eager body, restore previous values — the
-    * runtime-bloom discipline shared by every conf-scoped row here.
+  /** Write variants shredded into typed parquet leaf columns, with the
+    * shredding schema inferred from the data. Shared with VariantShredSpec.
     */
-  private[graft] def withScopedConfs[T](
-      s: org.apache.spark.sql.SparkSession,
-      confs: Seq[(String, String)])(body: => T): T = {
-    val keep = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try { confs.foreach { case (k, v) => s.conf.set(k, v) }; body }
-    finally keep.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+  private[graft] val variantShredConfs = Seq(
+    "spark.sql.variant.writeShredding.enabled" -> "true",
+    "spark.sql.variant.inferShreddingSchema" -> "true")
+
+  /** Broadcast off, so the bucketed tables of [[sink_bucketed_join]] join
+    * by sort-merge — the co-located plan bucketing buys, which Catalyst
+    * would otherwise (rightly) replace with a broadcast at fixture scale.
+    */
+  private[graft] val noBroadcastConfs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, util}
+import graft.GraftSession.{mountCatalog, withConfs}
 import graft.cdc.Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -250,6 +251,21 @@ class RecentEventsProcessor
   */
 object Streaming {
 
+  /** The RocksDB state store: keyed state off-heap on local disk, bounded
+    * by SSD rather than executor heap, with incremental snapshot upload.
+    * `transformWithState` requires it.
+    */
+  private[graft] val rocksDbConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Four state-store partitions, pinned by the stream rows that fix
+    * their width (state readers, restart, changelog, observed metrics).
+    * Nested inside [[withStreamStatePartitions]], it overrides the derived
+    * width for that row's stream only.
+    */
+  private[graft] val fourStatePartitions = Seq("spark.sql.shuffle.partitions" -> "4")
+
   // staged inputs are immutable once built → memoize per (dir, variant):
   // under the bench's two-pass timing every streaming query would otherwise
   // re-copy (or re-write, for the split) its staging files on each run.
@@ -438,11 +454,7 @@ object Streaming {
     * check against the memory-sink run.
     */
   private[graft] def dedupRocksNoopSink(s: SparkSession, dir: String): Long = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    try {
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withConfs(s, rocksDbConfs) {
       val ev = eventsStream(s, stage(dir, 2), ntz = false)
       val dedup = ev.withWatermark("ts", "1 hour")
         .dropDuplicates("event_id")
@@ -451,9 +463,6 @@ object Streaming {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.recentProgress.map(_.sink.numOutputRows).filter(_ > 0).sum
-    } finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -502,15 +511,9 @@ object Streaming {
   private[graft] def changelogCheckpointRun(s: SparkSession, dir: String)
       : (DataFrame, String,
          Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true",
-      "spark.sql.shuffle.partitions" -> "4")
-    val keep = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val changelog =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
+    withConfs(s, rocksDbConfs ++ Seq(changelog) ++ fourStatePartitions) {
       val ckpt = graft.util.tempDir("graft_changelog_ckpt_")
       val ev = eventsStream(s, stageSplitByTime(s, dir),
         maxFilesPerTrigger = Some(1), ntz = false)
@@ -525,9 +528,6 @@ object Streaming {
       q.awaitTermination()
       (s.table("t_changelog").orderBy(col("event_type")), ckpt,
         q.recentProgress.toSeq)
-    } finally keep.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -544,16 +544,14 @@ object Streaming {
     * conf is set around fn's body only: every streaming row runs its
     * query to completion INSIDE fn (awaitTermination on AvailableNow),
     * so the scope covers the stream and the returned memory-table read
-    * is partition-agnostic. Two rows already did exactly this inline
-    * (state readers pin 4); nested set/restore composes. Results are
+    * is partition-agnostic. Rows that pin [[fourStatePartitions]] nest
+    * inside this scope and restore its width on exit. Results are
     * partitioning-independent by construction — the same rows hash-match
     * the oracle when the driver benches at SPARK_GRAFT_CPUS=4.
     */
-  private[ops] def withStreamStatePartitions(
+  private[graft] def withStreamStatePartitions(
       fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = (s, dir) => {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
     // width from the TOTAL input-dir bytes (not one table): every
     // wrapped row's state is bounded by what it reads from the dir, and
     // a 100 TB landing zone sizes to thousands of partitions while the
@@ -561,19 +559,15 @@ object Streaming {
     //
     // Execution contract: wrapped rows run strictly sequentially on the
     // session (the bench and verify drivers are single-threaded) — the
-    // set/restore of the session-global conf would race under concurrent
-    // row execution, and lazy work in the returned DataFrame executes
+    // scoped conf is session-global and would race under concurrent row
+    // execution, and lazy work in the returned DataFrame executes
     // after restore (fine: every wrapped row's RESULT is
     // partitioning-agnostic; the width only shapes the stream's state
     // stores, which fn runs to completion). (ADVICE r16)
     dirBytes(s, dir) match {
       case Some(bytes) =>
         val p = math.max(4L, bytes / (32L << 20))
-        try { s.conf.set(key, p.toString); fn(s, dir) }
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
+        withConfs(s, Seq("spark.sql.shuffle.partitions" -> p.toString))(fn(s, dir))
       case None =>
         // probe failed: keep the SESSION default rather than flooring at
         // 4 — on any storage the probe can't see, a floor-4 width is the
@@ -643,9 +637,7 @@ object Streaming {
       // must equal the batch answer exactly (count + exact-cents sum).
       (s, dir) => {
         val ckpt = graft.util.tempDir("graft_statereader_ckpt_")
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "4")
+        withConfs(s, fourStatePartitions) {
           val agg = eventsStream(s, stage(dir, 1))
             .groupBy(col("event_type"))
             .agg(count(lit(1)).as("n_events"),
@@ -654,7 +646,7 @@ object Streaming {
             .option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
         s.read.format("statestore").load(ckpt)
           .select(col("key.event_type").as("event_type"),
             col("value.count").as("n_events"),
@@ -685,13 +677,11 @@ object Streaming {
           count(lit(1)).as("n_rows"),
           sum(cents).as("sum_cents"),
           count(when(col("user_id").isNull, 1)).as("n_null_user"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        val q = try {
-          s.conf.set("spark.sql.shuffle.partitions", "4")
+        val q = withConfs(s, fourStatePartitions) {
           val q0 = observed.writeStream.format("noop")
             .trigger(Trigger.AvailableNow()).start()
           q0.awaitTermination(); q0
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
         val totals = q.recentProgress.toSeq
           .flatMap(p => Option(p.observedMetrics.get("gate")))
           .foldLeft((0L, 0L, 0L)) { (acc, r) =>
@@ -841,20 +831,13 @@ object Streaming {
       // The results must be byte-identical to the default provider's
       // (same oracle as stream_dedup_keys certifies exactly that).
       (s, dir) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stage(dir, 2), ntz = false)
           val dedup = ev.withWatermark("ts", "1 hour")
             .dropDuplicates("event_id")
             .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
           runToMemory(s, dedup, "t_dedup_rocks", "append")
             .orderBy(col("event_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT event_id, user_id, event_type, value
@@ -980,11 +963,7 @@ object Streaming {
       // required by this API.
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           // two micro-batches (see stream_stateful_agg) so state.exists()
           // takes the true branch on the second batch
           val ev = eventsStream(s, stageSplitByTime(s, dir), maxFilesPerTrigger = Some(1))
@@ -1001,9 +980,6 @@ object Streaming {
               max_by(col("sum_cents"), col("n_events")).as("sum_cents"),
               max(col("max_cents")).as("max_cents"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT user_id,
@@ -1023,11 +999,7 @@ object Streaming {
       // the cutoff (update mode only emits keys that saw input).
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val cutoffNs = 1705276800L * 1000000000L // 2024-01-15T00:00Z
           val initial = graft.Tables.events(s, dir)
             .filter(col("ts_ns") < cutoffNs)
@@ -1051,9 +1023,6 @@ object Streaming {
             .agg(max(col("n_events")).as("n_events"),
               max_by(col("sum_cents"), col("n_events")).as("sum_cents"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""WITH active AS (
@@ -1075,11 +1044,7 @@ object Streaming {
       // machine as three conditional-min CTE hops.
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stageSplitByTime(s, dir), maxFilesPerTrigger = Some(1))
             .select(col("user_id"), col("ts_ns"), col("event_id"), col("event_type"))
             .as[(Long, Long, Long, String)]
@@ -1089,9 +1054,6 @@ object Streaming {
             .toDF("user_id", "signup_ns", "click_ns", "purchase_ns")
           runToMemory(s, out, "t_cep", "update")
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""WITH ev AS (
@@ -1335,13 +1297,7 @@ object Streaming {
       (s, dir) => {
         import s.implicits._
         val ckpt = graft.util.tempDir("graft_tws_reader_ckpt_")
-        val provider = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = s.conf.getOption(provider)
-        val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-        try {
-          s.conf.set(provider,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          s.conf.set("spark.sql.shuffle.partitions", "4")
+        withConfs(s, rocksDbConfs ++ fourStatePartitions) {
           val ev = eventsStream(s, stage(dir, 1))
             .select(col("user_id"), col("event_id"),
               floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
@@ -1354,12 +1310,6 @@ object Streaming {
             .option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
-        } finally {
-          prevProv match {
-            case Some(p) => s.conf.set(provider, p)
-            case None => s.conf.unset(provider)
-          }
-          s.conf.set("spark.sql.shuffle.partitions", prevPart)
         }
         s.read.format("statestore").option("stateVarName", "totals")
           .load(ckpt)
@@ -1433,9 +1383,7 @@ object Streaming {
       // Same oracle family as stream_foreachBatch_upsert: the replica
       // must equal the one-shot latest-per-key fold of the whole feed.
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.util.catalogWarehouse)
+        mountCatalog(s)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.stream")
         s.sql("DROP TABLE IF EXISTS graft_cat.stream.replica")
         s.sql("""CREATE TABLE graft_cat.stream.replica
@@ -1575,9 +1523,7 @@ object Streaming {
         val ckpt = graft.util.tempDir("graft_restart_ckpt_")
         val outDir = graft.util.tempDir("graft_restart_out_")
         def runOnce(): Unit = {
-          val prev = s.conf.get("spark.sql.shuffle.partitions")
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
+          withConfs(s, fourStatePartitions) {
             val agg = eventsStream(s, streamed, ntz = false)
               .withWatermark("ts", "10 minutes")
               .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -1589,7 +1535,7 @@ object Streaming {
               .option("path", outDir).option("checkpointLocation", ckpt)
               .trigger(Trigger.AvailableNow()).start()
             q.awaitTermination()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          }
         }
         // run 1: only the early half exists yet
         Files.copy(Paths.get(s"$split/events_early.parquet"),
@@ -1626,11 +1572,7 @@ object Streaming {
       // per-user top-3 by (ts, event_id) descending.
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stageSplitByTime(s, dir), maxFilesPerTrigger = Some(1))
             // µs (not ns) ordering key: matches the oracle's µs `ts` under
             // BOTH events parquet layouts (legacy nanos truncate the same)
@@ -1648,9 +1590,6 @@ object Streaming {
               array_join(transform(max_by(col("last3"), col("n_events")),
                 x => x.cast("string")), ",").as("last3"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
@@ -1670,11 +1609,7 @@ object Streaming {
       // GROUP BY user, type.
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stageSplitByTime(s, dir), maxFilesPerTrigger = Some(1))
             .select(col("user_id"), col("event_type"),
               floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
@@ -1688,9 +1623,6 @@ object Streaming {
             .agg(max(col("n_events")).as("n_events"),
               max_by(col("sum_cents"), col("n_events")).as("sum_cents"))
             .orderBy(col("user_id"), col("event_type"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""SELECT user_id, event_type,
@@ -1760,11 +1692,7 @@ object Streaming {
       // users at any sf, checked at authoring time).
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stage(dir, 1), ntz = false)
             .withWatermark("ts", "0 seconds")
             .select(col("user_id"), expr("unix_micros(ts)").as("us"))
@@ -1777,9 +1705,6 @@ object Streaming {
             .select(col("user_id"), col("n_events"),
               timestamp_micros(col("last_us")).cast("timestamp_ntz").as("last_ts"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""WITH m AS (SELECT max(ts) AS wm FROM events),
@@ -1807,11 +1732,7 @@ object Streaming {
         import s.implicits._
         // TTL state tags each value with an expiry column family —
         // RocksDB provider only (HDFS-backed store has no column families)
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        try {
-          s.conf.set(key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stageSplitByTime(s, dir),
               maxFilesPerTrigger = Some(1))
             .select(col("user_id"),
@@ -1828,9 +1749,6 @@ object Streaming {
               sum(col("cents")).as("sum_cents"),
               count(lit(1)).as("n_emits"))
             .orderBy(col("user_id"))
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
         }
       },
       Some("""WITH b AS (

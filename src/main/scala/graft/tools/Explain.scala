@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.functions.col
 
 /** Dev tool: dump the formatted physical plan of every registered query
@@ -13,14 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.build(4)
     spark.sparkContext.setLogLevel("ERROR")
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
@@ -33,14 +25,12 @@ object Explain {
           // the property bucketing buys; at fixture scale Catalyst would
           // otherwise (rightly) broadcast the small side and hide it.
           q.fn(spark, sfDir).collect()
-          val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-          try {
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+          GraftSession.withConfs(spark, graft.ops.Sources.noBroadcastConfs) {
             println(fmt(spark.table("graft_buckets.lineitem_b")
               .join(spark.table("graft_buckets.orders_b"),
                 col("l_orderkey") === col("o_orderkey"))
               .select("o_orderpriority")))
-          } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+          }
         } else if (q.name == "sink_zorder_layout") {
           // the registered fn returns a RE-READ of the landed files (scan +
           // output sort — nothing to see); the plan that matters is the
@@ -83,7 +73,7 @@ object Explain {
           // the registered fn returns a re-read of landed parquet; the
           // plan that matters is the joined side under the runtime-filter
           // configs — bloom_filter_agg subquery + might_contain at the scan
-          println(graft.ops.Joins.withBloomConfs(spark) {
+          println(GraftSession.withConfs(spark, graft.ops.Joins.bloomConfs) {
             fmt(graft.ops.Joins.bloomProneJoin(spark, sfDir))
           })
         } else println(fmt(q.fn(spark, sfDir)))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** ×K stress of the DBSCAN core census under density retuning
   * (round-14, verdict #5): the r13 stress showed the FIXED parameters at
   * ×10 density going 4.1×. This tool stages the key-shifted ×K customer
@@ -23,15 +21,7 @@ object GeoScale {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     graft.util.sweepStaleScratch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(cpus.toInt)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val scaledDir = graft.util.tempDir(s"graft_geoscale_x${factor}_")

@@ -12,6 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class AnalyticsExtrasSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val dir = SparkTestBase.sfDir
+  // interpreted eval only: no whole-stage or expression codegen
+  private val interpretedOnly = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
@@ -177,19 +181,10 @@ class AnalyticsExtrasSpec extends AnyFunSuite {
       .map(r => (r.getSeq[Long](2)(0), r.getSeq[Long](2)(1)))
     assert(got.toSeq == cases.map(brute))
     // interpreted eval must agree with the codegen'd path
-    val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    GraftSession.withConfs(spark, interpretedOnly) {
       val interp = df.orderBy(col("id")).collect()
         .map(r => (r.getSeq[Long](2)(0), r.getSeq[Long](2)(1)))
       assert(interp.toSeq == got.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.codegen.wholeStage", p)
-        case None => spark.conf.unset("spark.sql.codegen.wholeStage")
-      }
     }
   }
 
@@ -251,20 +246,11 @@ class AnalyticsExtrasSpec extends AnyFunSuite {
     val aligned = (0 until 64).map(k => qv(k) * dv(k)).sum
     assert(maxsim >= aligned, "MaxSim must dominate the aligned dot")
     // the native LongMaxSim kernel: interpreted eval must agree with codegen
-    val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    GraftSession.withConfs(spark, interpretedOnly) {
       val interp = q("sim_maxsim_late_interaction").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       assert(interp.toSeq === rows.map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.codegen.wholeStage", p)
-        case None => spark.conf.unset("spark.sql.codegen.wholeStage")
-      }
     }
   }
 

@@ -14,6 +14,10 @@ class PlanShapeSpec extends AnyFunSuite {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  private def cboConfs(on: Boolean) = Seq(
+    "spark.sql.cbo.enabled" -> on.toString,
+    "spark.sql.cbo.joinReorder.enabled" -> on.toString)
+
   test("join_broadcast_inner plans a BroadcastHashJoin") {
     assert(planOf("join_broadcast_inner").contains("BroadcastHashJoin"))
   }
@@ -63,9 +67,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan0.contains("Bucketed: true"), s"scans not bucketed:\n$plan0")
     // at fixture scale Catalyst rightly broadcasts; simulate both sides
     // too big to broadcast — the bucketed SMJ must then need NO exchange
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConfs(spark, ops.Sources.noBroadcastConfs) {
       val join = spark.table("graft_buckets.lineitem_b")
         .join(spark.table("graft_buckets.orders_b"),
           org.apache.spark.sql.functions.col("l_orderkey") ===
@@ -75,7 +77,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join still shuffles:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("correlated subqueries decorrelate (no per-row re-execution)") {
@@ -246,7 +248,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("join_bloom_pruned pushes a runtime bloom filter into the probe scan") {
-    val plan = ops.Joins.withBloomConfs(spark) {
+    val plan = GraftSession.withConfs(spark, ops.Joins.bloomConfs) {
       ops.Joins.bloomProneJoin(spark, dir).queryExecution.executedPlan.toString
     }
     // InjectRuntimeFilter: the lineitem side must carry a might_contain
@@ -391,18 +393,12 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("join_skew_aqe: OptimizeSkewedJoin splits the hot partition (skew=true)") {
-    val confs = graft.ops.Joins.skewAqeConfs
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    GraftSession.withConfs(spark, ops.Joins.skewAqeConfs) {
       val df = graft.ops.Joins.skewedSupplierJoin(spark, dir)
       df.collect() // AQE finalizes the plan only on execution
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed join:\n$plan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -419,7 +415,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("join_runtime_bloom_filter: InjectRuntimeFilter plants might_contain on the fact side") {
-    ops.Joins.withBloomFilterConfs(spark) {
+    GraftSession.withConfs(spark, ops.Joins.bloomConfs) {
       val plan = ops.Joins.bloomFilterJoin(spark, dir)
         .queryExecution.optimizedPlan.toString
       assert(plan.contains("might_contain"),
@@ -428,7 +424,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("join_storage_partitioned: reported KeyGroupedPartitioning joins with zero exchanges") {
-    ops.Joins.withSpjConfs(spark) {
+    GraftSession.withConfs(spark, ops.Joins.spjConfs) {
       val j = ops.Joins.spjJoin(spark, dir)
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan.take(600))
@@ -448,22 +444,14 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     // the badly-written chain contains a join whose WHOLE subtree is the
     // two fact tables iff the literal order survived optimization
-    def factFactJoin(cbo: Boolean): Boolean = {
-      val confs = Seq("spark.sql.cbo.enabled" -> cbo.toString,
-        "spark.sql.cbo.joinReorder.enabled" -> cbo.toString)
-      val keep = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      try {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    def factFactJoin(cbo: Boolean): Boolean =
+      GraftSession.withConfs(spark, cboConfs(cbo)) {
         val plan = spark.sql(ops.Joins.cboStarSql).queryExecution.optimizedPlan
         plan.collect { case j: Join => j }.exists { j =>
           val names = j.collectLeaves().flatMap(leafName(_))
           names.nonEmpty && names.toSet.subsetOf(Set("lineitem", "orders"))
         }
-      } finally keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
       }
-    }
     assert(factFactJoin(cbo = false),
       "without CBO the literal order must keep lineitem ⋈ orders at the bottom")
     assert(!factFactJoin(cbo = true),
@@ -480,23 +468,15 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     // literal order survived iff some join's whole subtree is the two
     // fact tables (lineitem ⋈ orders before customer ever joins)
-    def factFactJoin(db: String, cbo: Boolean): Boolean = {
-      val confs = Seq("spark.sql.cbo.enabled" -> cbo.toString,
-        "spark.sql.cbo.joinReorder.enabled" -> cbo.toString)
-      val keep = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      try {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    def factFactJoin(db: String, cbo: Boolean): Boolean =
+      GraftSession.withConfs(spark, cboConfs(cbo)) {
         val plan = spark.sql(ops.Joins.cbo3StarSql(db))
           .queryExecution.optimizedPlan
         plan.collect { case j: Join => j }.exists { j =>
           val names = j.collectLeaves().flatMap(leafName(_))
           names.nonEmpty && names.toSet.subsetOf(Set("lineitem", "orders"))
         }
-      } finally keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
       }
-    }
     // all three leverage points: the REORDER needs stats AND cbo — the
     // flag alone (no ANALYZE) and the stats alone (cbo off) both keep
     // the literal fact-fact-first order
@@ -507,26 +487,16 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(factFactJoin("graft_cbo3a", cbo = false),
       "stats without CBO must keep the literal order")
     // and the answer is order-invariant: analyzed+cbo ≡ plain
-    val keep = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    val (withCbo, without) =
-      try {
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        val a = spark.sql(ops.Joins.cbo3StarSql("graft_cbo3a")).collect().toSeq
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-        (a, spark.sql(ops.Joins.cbo3StarSql("graft_cbo3a")).collect().toSeq)
-      } finally keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    assert(withCbo === without, "reorder must never change the answer")
+    def answer(cbo: Boolean) = GraftSession.withConfs(spark, cboConfs(cbo)) {
+      spark.sql(ops.Joins.cbo3StarSql("graft_cbo3a")).collect().toSeq
+    }
+    assert(answer(cbo = true) === answer(cbo = false),
+      "reorder must never change the answer")
   }
 
   test("scan_parquet_agg_pushdown: the scan carries PushedAggregation (metadata-only)") {
     val src = ops.Sources.aggPushdownStage(spark, dir)
-    ops.Sources.withScopedConfs(spark, ops.Sources.aggPushdownConfs) {
+    GraftSession.withConfs(spark, ops.Sources.aggPushdownConfs) {
       val plan = ops.Sources.aggPushdownQuery(spark, src)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedAggregation"),
@@ -626,7 +596,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("join_aqe_bhj_conversion: AQE converts the denied-broadcast join to BHJ at runtime") {
-    ops.Joins.withAqeBhjConfs(spark) {
+    GraftSession.withConfs(spark, ops.Joins.aqeBhjConfs) {
       val df = ops.Joins.aqeBhjJoin(spark, dir)
       df.collect() // AQE finalizes only on execution
       val plan = df.queryExecution.executedPlan.toString

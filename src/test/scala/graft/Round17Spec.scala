@@ -82,5 +82,11 @@ class Round17Spec extends AnyFunSuite {
     assert(keys === (21 to 60).map(i => f"q$i%03d"))
     assert(line.contains("\"q060\":0.6000"))
     assert(line.length < 2048, s"heavy line must stay tail-capture small, was ${line.length}")
+    // a comma-decimal default locale must not change the JSON
+    val default = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      assert(graft.Bench.heavyLine(rows) === line)
+    } finally java.util.Locale.setDefault(default)
   }
 }

@@ -88,7 +88,7 @@ class RuntimeMetricsSpec extends AnyFunSuite {
   }
 
   test("join_storage_partitioned moves ZERO shuffle bytes at runtime") {
-    ops.Joins.withSpjConfs(spark) {
+    GraftSession.withConfs(spark, ops.Joins.spjConfs) {
       // first run stages the SPJ layout (repartition jobs) and warms the
       // path; the MEASURED run is the join alone. The action is
       // foreachPartition, not count() — count's own final aggregation
@@ -109,9 +109,7 @@ class RuntimeMetricsSpec extends AnyFunSuite {
     // creating the bucketed tables IS allowed to shuffle; the measured
     // join of the two landed tables is not
     SparkEntry.queries("sink_bucketed_join")(spark, dir).count()
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConfs(spark, ops.Sources.noBroadcastConfs) {
       val join = spark.table("graft_buckets.lineitem_b")
         .join(spark.table("graft_buckets.orders_b"),
           col("l_orderkey") === col("o_orderkey"))
@@ -124,11 +122,11 @@ class RuntimeMetricsSpec extends AnyFunSuite {
         probe.shuffleBytesRead.get() == 0,
         s"bucketed join still shuffled: wrote ${probe.shuffleBytesWritten.get()} B, " +
           s"read ${probe.shuffleBytesRead.get()} B")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("join_runtime_bloom_filter: the probe KILLS fact rows before the exchange") {
-    ops.Joins.withBloomFilterConfs(spark) {
+    GraftSession.withConfs(spark, ops.Joins.bloomConfs) {
       val df = ops.Joins.bloomFilterJoin(spark, dir)
       df.collect()
       val nodes = flatten(df.queryExecution.executedPlan)

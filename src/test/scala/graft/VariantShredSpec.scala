@@ -16,9 +16,7 @@ class VariantShredSpec extends AnyFunSuite {
 
   private lazy val shredded: String = {
     val tmp = util.tempDir("graft_shredspec_")
-    ops.Sources.withScopedConfs(spark, Seq(
-      "spark.sql.variant.writeShredding.enabled" -> "true",
-      "spark.sql.variant.inferShreddingSchema" -> "true")) {
+    GraftSession.withConfs(spark, ops.Sources.variantShredConfs) {
       Tables.events(spark, dir)
         .select(col("event_id"), expr(
           """parse_json(to_json(named_struct(
