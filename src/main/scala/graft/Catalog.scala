@@ -14,31 +14,18 @@ object Catalog {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  // one registration per (session, dir): ~20 registry rows call
-  // registerAll, and each un-memoized call re-infers 10 parquet schemas.
-  // ADVICE r8: keyed by the session OBJECT in a WeakHashMap, not
-  // identityHashCode — identity hashes can be reused after a session is
-  // GC'd (or collide between two live sessions), which would silently skip
-  // registration in the new session; weak keys also stop the map retaining
-  // dead sessions forever. Reference equality is exactly the right notion
-  // of "same session" here.
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
   /** Register all fixture tables as temp views over `dir`. `events` gets
-    * the layout-normalized view from [[Tables.events]]. Idempotent and
-    * memoized per (session, dir).
+    * the layout-normalized view from [[Tables.events]]. Staged per session
+    * (about 20 registry rows call this, and each registration re-infers 10
+    * parquet schemas); a call with another dir re-points every view.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    if (registered.get(spark) != dir) {
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    Staged(spark, "catalog.views", dir) {
       tableNames.foreach { t =>
         val df = if (t == "events") Tables.events(spark, dir) else Tables(spark, dir, t)
         df.createOrReplaceTempView(t)
       }
-      registered.put(spark, dir)
-      ()
     }
-  }
 
   /** One-call SQL-over-replica: register + query. */
   def sql(spark: SparkSession, dir: String, query: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Q, Staged, Tables}
 import graft.GraftSession.withConfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -105,8 +105,8 @@ object Graph {
     }
   }
 
-  /** Near-dup candidate components over `documents`, memoized per fixture
-    * dir: the labeled frame is shared by `dedup_connected_components` and
+  /** Near-dup candidate components over `documents`, staged per session:
+    * the labeled frame is shared by `dedup_connected_components` and
     * `dedup_cluster_representative` (identical candidate graph), so the
     * iterative propagation runs once per session, not once per query. The
     * cached frame is an eager localCheckpoint — materialized blocks, no
@@ -119,21 +119,9 @@ object Graph {
     * probe row to its 3 neighbor values — at scale an equi-join shuffle
     * beats a range theta-join by orders of magnitude.
     */
-  // Keyed by (session, dir), not dir alone: the cached DataFrame is bound to
-  // the SparkSession that built it, and a dir-only key would hand a frame
-  // from a stopped/foreign session to the next caller in the same JVM.
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   private def labeledComponents(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    // Evict entries whose session has stopped: the map would otherwise
-    // strongly retain every SparkSession (and its checkpointed blocks) for
-    // JVM lifetime — unbounded growth in long-lived JVMs that cycle
-    // sessions (test suites, notebooks).
-    ccCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ccCache.computeIfAbsent((s, dir), { _ =>
+      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    Staged(s, "graph.cc", dir) {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val probe = docs.select(col("source"),
@@ -145,8 +133,7 @@ object Graph {
         .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
       connectedComponents(docs, edges).localCheckpoint(true)
-    })
-  }
+    }
 
   val defs: Seq[Q] = Seq(
     Q(

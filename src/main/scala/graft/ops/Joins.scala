@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, util}
+import graft.{Q, Staged, Tables, util}
 import graft.GraftSession.withConfs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -2583,23 +2583,12 @@ object Joins {
       |       CAST(max(mult) AS BIGINT) AS max_mult
       |FROM bom GROUP BY depth ORDER BY depth""".stripMargin
 
-  /** Land the star as catalog tables + ANALYZE, memoized per session
-    * (same WeakHashMap rationale as [[graft.Catalog.registerAll]]: keyed
-    * by session OBJECT, weak so dead sessions drop out). Narrow landed
-    * projections — statistics land with the physical design choice.
-    */
-  private val cboLanded = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
   /** Land the 3-table star twice — `graft_cbo3a` ANALYZEd, `graft_cbo3n`
     * not — for [[sql_cbo_join_reorder]] and PlanShapeSpec's
-    * stats-present/stats-absent pin. Memoized like [[cboLand]].
+    * stats-present/stats-absent pin. Staged per session like [[cboLand]].
     */
-  private val cbo3Landed = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
-  private[graft] def cbo3Land(s: SparkSession, dir: String): Unit = {
-    if (cbo3Landed.get(s) != dir) {
+  private[graft] def cbo3Land(s: SparkSession, dir: String): Unit =
+    Staged(s, "joins.cbo3", dir) {
       val land = Seq(
         "customer" -> Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal")),
@@ -2607,17 +2596,20 @@ object Joins {
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority")),
         "lineitem" -> Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")))
-      Seq("graft_cbo3a" -> true, "graft_cbo3n" -> false).foreach {
-        case (db, analyze) =>
-          val loc = graft.util.tempDir(s"graft_${db}_db_")
-          s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-          land.foreach { case (n, df) =>
-            df.write.mode("overwrite").format("parquet").saveAsTable(s"$db.$n")
-            if (analyze)
-              s.sql(s"ANALYZE TABLE $db.$n COMPUTE STATISTICS FOR ALL COLUMNS")
-          }
-      }
-      cbo3Landed.put(s, dir); ()
+      landTables(s, "graft_cbo3a", land, analyze = true)
+      landTables(s, "graft_cbo3n", land, analyze = false)
+    }
+
+  /** Save `land` as parquet tables of database `db` (created over a fresh
+    * scratch location), ANALYZEd FOR ALL COLUMNS if `analyze`.
+    */
+  private def landTables(s: SparkSession, db: String,
+      land: Seq[(String, org.apache.spark.sql.DataFrame)], analyze: Boolean): Unit = {
+    val loc = graft.util.tempDir(s"graft_${db}_db_")
+    s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+    land.foreach { case (n, df) =>
+      df.write.mode("overwrite").format("parquet").saveAsTable(s"$db.$n")
+      if (analyze) s.sql(s"ANALYZE TABLE $db.$n COMPUTE STATISTICS FOR ALL COLUMNS")
     }
   }
 
@@ -2636,11 +2628,13 @@ object Joins {
        |GROUP BY o_orderpriority
        |ORDER BY o_orderpriority""".stripMargin
 
-  private[graft] def cboLand(s: SparkSession, dir: String): Unit = {
-    if (cboLanded.get(s) != dir) {
-      val loc = graft.util.tempDir("graft_cbo_db_")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS graft_cbo LOCATION '$loc'")
-      val land = Seq(
+  /** Land the star as catalog tables + ANALYZE, staged per session (the
+    * `graft_cbo` names are session-global, so the last dir wins). Narrow
+    * landed projections — statistics land with the physical design choice.
+    */
+  private[graft] def cboLand(s: SparkSession, dir: String): Unit =
+    Staged(s, "joins.cbo", dir) {
+      landTables(s, "graft_cbo", Seq(
         "region" -> Tables(s, dir, "region"),
         "nation" -> Tables(s, dir, "nation"),
         "customer" -> Tables(s, dir, "customer")
@@ -2648,14 +2642,9 @@ object Joins {
         "orders" -> Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey")),
         "lineitem" -> Tables(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")))
-      land.foreach { case (n, df) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(s"graft_cbo.$n")
-        s.sql(s"ANALYZE TABLE graft_cbo.$n COMPUTE STATISTICS FOR ALL COLUMNS")
-      }
-      cboLanded.put(s, dir); ()
+          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))),
+        analyze = true)
     }
-  }
 
   /** The selective fact-fact join for [[join_runtime_bloom_filter]]:
     * urgent orders (selective creation side) ⋈ lineitem (application
@@ -2677,11 +2666,8 @@ object Joins {
   /** Stage both SPJ sides once per fixture dir (bucket = key % 8, landed
     * executor-side by [[graft.sources.SpjStage]]).
     */
-  private val spjCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def spjStage(s: SparkSession, dir: String): String =
-    spjCache.computeIfAbsent(dir, { _ =>
+    Staged(s, "joins.spj", dir) {
       val base = graft.util.tempDir("graft_spj_")
       graft.sources.SpjStage(
         Tables(s, dir, "orders").select(
@@ -2694,7 +2680,7 @@ object Joins {
           col("l_orderkey"), col("l_extendedprice")),
         s"$base/lineitem")
       base
-    })
+    }
 
   /** Confs under which Spark matches the two reported partitionings:
     * v2 bucketing on, partial-cluster-key matching allowed, broadcast

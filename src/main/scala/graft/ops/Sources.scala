@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables, util}
 import graft.GraftSession.{mountCatalog, withConfs}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
@@ -81,7 +82,7 @@ object Sources {
     * everything except the day-index extraction (the one dialect split:
     * Spark `datediff`, DuckDB date subtraction) is shared text. Scaling
     * uses float-floor division instead of integer `div`/`//` so the SAME
-    * string parses on both engines; operands stay far below 2^53, so the
+    * string parses on both engines; under [[scaledGrid]]'s precondition the
     * doubles are exact.
     */
   private[graft] def hilbertOrdersSql(dayIdxExpr: String): String =
@@ -101,33 +102,43 @@ object Sources {
        |${hilbertCtes("sc", 10, Seq("o_orderkey", "o_custkey", "day_idx"))}
        |SELECT o_orderkey, o_custkey, day_idx, d AS hkey FROM hl9""".stripMargin
 
-  /** Orders with a Z-order key over (o_custkey, days-since-1992). Raw
-    * values must NOT be interleaved directly: with unequal domain widths
-    * (150 custkeys vs ~2400 days at sf0.001) the wider dimension owns all
-    * the high bits and the curve degenerates to a single-column sort. Both
-    * dimensions are first scaled to a common 1024-cell grid — the
-    * range-rank trick production Z-order writers use — with pure integer
-    * arithmetic (`* 1024 div span`; both inputs non-negative, so Spark's
-    * truncating `div` and DuckDB's floor `//` agree), keeping the key
-    * exactly reproducible in the oracle. The min/max bounds come from a
-    * broadcast one-row aggregate — at scale, a column-statistics read.
+  /** Days since 1992-01-01 of `o_orderdate`, as BIGINT `day_idx`. */
+  private def dayIdx: Column =
+    datediff(col("o_orderdate").cast("date"), lit("1992-01-01").cast("date"))
+      .cast("long").as("day_idx")
+
+  /** Add the (custkey × day) grid cells `cs`/`ds` to an orders frame with
+    * `o_custkey` and `day_idx`. Raw values must NOT be interleaved
+    * directly: with unequal domain widths (150 custkeys vs ~2400 days at
+    * sf0.001) the wider dimension owns all the high bits and the curve
+    * degenerates to a single-column sort. Both dimensions are scaled to a
+    * common 1024-cell grid — the range-rank trick production Z-order and
+    * Hilbert writers use — with `* 1024 div span`. The min/max bounds come
+    * from a broadcast one-row aggregate — at scale, a column-statistics
+    * read.
+    *
+    * Precondition: the operands `(v - min) * 1024` and `span` are
+    * non-negative and below 2^53. Then Spark's truncating `div`, DuckDB's
+    * floor `//` and the float-floor text of [[hilbertOrdersSql]] all give
+    * the same cell.
     */
-  private[graft] def zorderOrders(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val o = Tables(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-      .withColumn("day_idx",
-        datediff(col("o_orderdate").cast("date"), lit("1992-01-01").cast("date"))
-          .cast("long"))
+  private[graft] def scaledGrid(o: DataFrame): DataFrame = {
     val bounds = o.agg(
       min(col("o_custkey")).as("cmin"), max(col("o_custkey")).as("cmax"),
       min(col("day_idx")).as("dmin"), max(col("day_idx")).as("dmax"))
     o.crossJoin(broadcast(bounds))
       .withColumn("cs", expr("((o_custkey - cmin) * 1024) div (cmax - cmin + 1)"))
       .withColumn("ds", expr("((day_idx - dmin) * 1024) div (dmax - dmin + 1)"))
+  }
+
+  /** Orders with a Z-order key over the [[scaledGrid]] cells, exactly
+    * reproducible in the oracle.
+    */
+  private[graft] def zorderOrders(s: SparkSession, dir: String): DataFrame =
+    scaledGrid(Tables(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"), dayIdx))
       .withColumn("zkey", expr(zkeySpark("cs", "ds", 10)))
       .select(col("o_orderkey"), col("o_custkey"), col("day_idx"), col("zkey"))
-  }
 
   /** The rows below that run a streaming query to completion inside fn —
     * they get the same scoped input-size-derived shuffle/state partition
@@ -1199,16 +1210,8 @@ object Sources {
         // fanned-out scan, so both passes run wide and codegen'd. The
         // landed layout, columns, and the DuckDB oracle (the unrolled
         // chain) are unchanged; the hash gate proves equivalence.
-        val o = graft.util.fanout(Tables(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            datediff(col("o_orderdate").cast("date"),
-              lit("1992-01-01").cast("date")).cast("long").as("day_idx")))
-        val bounds = o.agg(
-          min(col("o_custkey")).as("cmin"), max(col("o_custkey")).as("cmax"),
-          min(col("day_idx")).as("dmin"), max(col("day_idx")).as("dmax"))
-        val keyed = o.crossJoin(broadcast(bounds))
-          .withColumn("cs", expr("((o_custkey - cmin) * 1024) div (cmax - cmin + 1)"))
-          .withColumn("ds", expr("((day_idx - dmin) * 1024) div (dmax - dmin + 1)"))
+        val keyed = scaledGrid(graft.util.fanout(Tables(s, dir, "orders")
+            .select(col("o_orderkey"), col("o_custkey"), dayIdx)))
           .select(col("o_orderkey"), col("o_custkey"), col("day_idx"),
             org.apache.spark.sql.functions.call_function(
               "hilbert_idx", col("cs"), col("ds")).as("hkey"))
@@ -1234,16 +1237,8 @@ object Sources {
       // a native codegen path certified bit-for-bit against a pure-SQL
       // second implementation.
       (s, dir) => {
-        val o = Tables(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            datediff(col("o_orderdate").cast("date"),
-              lit("1992-01-01").cast("date")).cast("long").as("day_idx"))
-        val bounds = o.agg(
-          min(col("o_custkey")).as("cmin"), max(col("o_custkey")).as("cmax"),
-          min(col("day_idx")).as("dmin"), max(col("day_idx")).as("dmax"))
-        o.crossJoin(broadcast(bounds))
-          .withColumn("cs", expr("((o_custkey - cmin) * 1024) div (cmax - cmin + 1)"))
-          .withColumn("ds", expr("((day_idx - dmin) * 1024) div (dmax - dmin + 1)"))
+        scaledGrid(Tables(s, dir, "orders")
+            .select(col("o_orderkey"), col("o_custkey"), dayIdx))
           .select(col("o_orderkey"),
             org.apache.spark.sql.functions.call_function(
               "hilbert_idx", col("cs"), col("ds")).as("hkey"))

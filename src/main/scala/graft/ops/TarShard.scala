@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Q, Staged, Tables}
 import org.apache.spark.sql.functions._
 
 /** WebDataset-style tar sharding (round-9, §2.11 multimodal tier): the
@@ -79,13 +79,10 @@ object TarShard {
     out.toSeq
   }
 
-  /** Stage the documents fixture as one ustar shard, memoized per dir. */
-  private val shardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Stage the documents fixture as one ustar shard, staged per session. */
   private[graft] def stageShard(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    shardCache.computeIfAbsent(dir, { _ =>
+    Staged(s, "tar.shard", dir) {
       val out = graft.util.tempDir("graft_tar_")
       val path = java.nio.file.Paths.get(s"$out/shard-000000.tar")
       val os = new java.io.BufferedOutputStream(
@@ -109,7 +106,7 @@ object TarShard {
         os.write(new Array[Byte](1024)) // archive terminator
       } finally os.close()
       out
-    })
+    }
 
   val defs: Seq[Q] = Seq(
     Q(

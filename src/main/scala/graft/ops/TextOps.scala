@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables, util}
+import graft.{Q, Staged, Tables, util}
 import graft.text.{MinHash, SimHash}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,29 +22,16 @@ object TextOps {
     * Returns (merge_rank, pair, pair_count_at_selection, vocab_after) —
     * `withVocab = false` skips the per-round countDistinct jobs for
     * callers that only need the ordered pairs (the encoder).
+    *
+    * Staged per (session, vocab flag): the trainer is deterministic, so
+    * every consumer — the trainer row, the encoder, the BPE budget row —
+    * shares ONE 5-round training run per session instead of re-learning
+    * the same merges, the way a production tokenizer is trained once and
+    * applied everywhere.
     */
-  /** Per-(session, sf dir, vocab flag) memo of the trained merge table
-    * (r15 verdict #6's build-once discipline applied to the tokenizer:
-    * the trainer is deterministic, so every consumer — the trainer row,
-    * the encoder, the BPE budget row — shares ONE 5-round training run
-    * per session instead of re-learning the same merges; this is
-    * exactly how a production tokenizer ships, trained once and applied
-    * everywhere).
-    */
-  private val bpeStage = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, Long, Long)]]()
-
   private def bpeTrain(s: SparkSession, dir: String, withVocab: Boolean)
-      : Seq[(Long, String, Long, Long)] = {
-    val key = s"${System.identityHashCode(s)}:$dir:$withVocab"
-    val cur = bpeStage.get(key)
-    if (cur != null) cur
-    else {
-      val v = bpeTrainBuild(s, dir, withVocab)
-      bpeStage.putIfAbsent(key, v)
-      v
-    }
-  }
+      : Seq[(Long, String, Long, Long)] =
+    Staged(s, s"text.bpe.$withVocab", dir)(bpeTrainBuild(s, dir, withVocab))
 
   private def bpeTrainBuild(s: SparkSession, dir: String, withVocab: Boolean)
       : Seq[(Long, String, Long, Long)] = {

@@ -14,6 +14,17 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("registerAll A, B, A leaves the views on A (last dir wins)") {
+    val other = dir.replace("sf0.001", "sf0.01")
+    val count = () => spark.sql("SELECT count(*) FROM orders").head.getLong(0)
+    Catalog.registerAll(spark, dir)
+    val small = count()
+    Catalog.registerAll(spark, other)
+    assert(count() > small, "sf0.01 must have more orders than sf0.001")
+    Catalog.registerAll(spark, dir)
+    assert(count() === small)
+  }
+
   test("arbitrary SQL over the replica runs with full optimization") {
     val df = Catalog.sql(spark, dir,
       """SELECT n_name, count(*) AS n_orders

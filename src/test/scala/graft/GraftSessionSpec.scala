@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -109,27 +107,9 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(leaks.isEmpty, leaks.mkString("\n"))
   }
 
-  private lazy val repoRoot: Path =
-    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null)
-      .find(p => Files.exists(p.resolve("build.sbt")))
-      .getOrElse(fail("no build.sbt above the working directory"))
-
-  /** Scala sources under `sub` (relative to the repo root) containing `needle`. */
-  private def filesContaining(sub: String, needle: String): Set[String] = {
-    val base = repoRoot.resolve(sub)
-    val walk = Files.walk(base)
-    try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains(needle))
-      .map(p => repoRoot.relativize(p).toString)
-      .toSet
-    finally walk.close()
-  }
-
   test("source guard: conf reads for restoring live only in GraftSession") {
     for (needle <- Seq("conf.get(", "conf.getOption(")) {
-      val hits = filesContaining("src/main/scala", needle)
+      val hits = SparkTestBase.filesContaining("src/main/scala", needle)
       assert(hits.subsetOf(Set("src/main/scala/graft/GraftSession.scala")),
         s"`$needle` outside GraftSession (scope confs with GraftSession.withConfs): $hits")
     }
@@ -143,7 +123,7 @@ class GraftSessionSpec extends AnyFunSuite {
       "src/main/scala/graft/GraftExtensions.scala", // doc comment
       "src/main/scala/graft/tools/LocalClusterSmoke.scala",
       "src/main/scala/graft/tools/ReplicaSoak.scala")
-    val hits = filesContaining("src", needle)
+    val hits = SparkTestBase.filesContaining("src", needle)
     assert(hits.subsetOf(allowed),
       s"session builder outside GraftSession (use GraftSession.build): ${hits -- allowed}")
   }

@@ -111,7 +111,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("AvailableNow file stream over staged events equals batch counts") {
-    val staged = ops.Streaming.stage(SparkTestBase.sfDir, 1)
+    val staged = ops.Streaming.stage(spark, SparkTestBase.sfDir, 1)
     val stream = ops.Streaming.eventsStream(spark, staged)
       .groupBy(col("event_type")).count()
     val q = stream.writeStream.outputMode("complete")
