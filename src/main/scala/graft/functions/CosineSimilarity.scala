@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for cosine similarity over two
@@ -66,15 +66,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register `cosine_sim` in the session's function registry and return a
-    * Column-level helper.
+  /** Column-level helper; SQL reaches the same kernel as `cosine_sim`
+    * through [[graft.GraftExtensions]].
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("cosine_sim", a, b)
-  }
+  def apply(a: Column, b: Column): Column =
+    Bridge.column(CosineSimilarity(Bridge.expressionOf(a), Bridge.expressionOf(b)))
 }

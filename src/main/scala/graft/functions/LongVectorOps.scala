@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native integer vector kernels for the quantized similarity tier
@@ -235,29 +235,15 @@ case class LongMaxSim(left: Expression, right: Expression, subDim: Int)
     copy(left = newLeft, right = newRight)
 }
 
+/** Column-level helpers over the kernels above. */
 object LongVectorOps {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_sqdist", exprs => LongSqDist(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot", exprs => LongDot(exprs(0), exprs(1)), "scala_udf")
-  }
+  /** MaxSim with a fixed sub-vector width. */
+  def maxsim(a: Column, b: Column, subDim: Int): Column =
+    Bridge.column(LongMaxSim(Bridge.expressionOf(a), Bridge.expressionOf(b), subDim))
 
-  /** MaxSim with a fixed sub-vector width; one registered function per
-    * width so the registry lambda stays literal-free.
-    */
-  def maxsim(spark: SparkSession, a: Column, b: Column, subDim: Int): Column = {
-    val name = s"long_maxsim_$subDim"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LongMaxSim(exprs(0), exprs(1), subDim), "scala_udf")
-    call_function(name, a, b)
-  }
+  def sqdist(a: Column, b: Column): Column =
+    Bridge.column(LongSqDist(Bridge.expressionOf(a), Bridge.expressionOf(b)))
 
-  def sqdist(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("long_sqdist", a, b)
-  }
-
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("long_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    Bridge.column(LongDot(Bridge.expressionOf(a), Bridge.expressionOf(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,12 +78,6 @@ object PortableTokenHashes {
     ArrayData.toArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "portable_token_hashes", exprs => PortableTokenHashes(exprs(0)), "scala_udf")
-
-  def apply(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("portable_token_hashes", text)
-  }
+  def apply(text: Column): Column =
+    Bridge.column(PortableTokenHashes(Bridge.expressionOf(text)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression for a 64-bit SimHash over a pre-hashed token
@@ -92,15 +92,9 @@ case class SimHashFingerprint(child: Expression)
 }
 
 object SimHashFingerprint {
-  /** Register `simhash_fp` in the session's function registry and return a
-    * Column-level helper.
+  /** Column-level helper; SQL reaches the same kernel as `simhash_fp`
+    * through [[graft.GraftExtensions]].
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_fp", exprs => SimHashFingerprint(exprs(0)), "scala_udf")
-
-  def apply(spark: SparkSession, hashes: Column): Column = {
-    register(spark)
-    call_function("simhash_fp", hashes)
-  }
+  def apply(hashes: Column): Column =
+    Bridge.column(SimHashFingerprint(Bridge.expressionOf(hashes)))
 }

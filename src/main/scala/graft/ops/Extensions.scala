@@ -175,7 +175,6 @@ object Extensions {
       (s, dir) => {
         val normText = udf((t: String) =>
           if (t == null) null else t.trim.toLowerCase.replaceAll(" +", " "))
-        s.udf.register("norm_text", normText)
         Tables(s, dir, "documents")
           .select(col("doc_id"), normText(col("text")).as("norm"))
           .orderBy(col("doc_id"))
@@ -1002,7 +1001,7 @@ object Extensions {
       // keep seeing only batch 1 while the audit runs AGAINST THE BRANCH
       // (row count + key-range constraint checks here), and only then
       // does publishBranch atomically promote the staged state to a real
-      // commit (v-snapshot + current pointer flip) and drop the branch.
+      // commit (the next version object) and drop the branch.
       // A failed audit would dropBranch instead and vacuum reclaims the
       // staged files — bad data is never visible to a main reader at any
       // point. Oracle: the two batches split orders, so the published
@@ -2068,8 +2067,8 @@ object Extensions {
       // History survives: the bad versions remain time-travel readable
       // after the rollback (v4 below restores v1 while v2/v3 stay
       // queryable — the property a plain overwrite-with-old-content
-      // loses, because overwrite REWRITES the bytes and this rewrites a
-      // pointer), and the restore is itself a version, so it can be
+      // loses, because overwrite REWRITES the bytes and this writes one
+      // version object), and the restore is itself a version, so it can be
       // rolled back too. The summary reads every version AFTER the
       // restore landed, so the oracle hash proves both directions:
       // current == v1 content, and v2/v3 == their original contents.

@@ -974,7 +974,7 @@ object SimOps {
         val scored = q.crossJoin(c)
           .filter(col("query_id") =!= col("neighbor_id"))
           .withColumn("cos",
-            graft.functions.CosineSimilarity(s, col("q_emb"), col("c_emb")))
+            graft.functions.CosineSimilarity(col("q_emb"), col("c_emb")))
         rankTopK(scored, 5)
       },
       Some(s"""WITH q AS (
@@ -1578,7 +1578,7 @@ object SimOps {
           .filter(col("query_id") =!= col("neighbor_id"))
           // native fused integer dot (LongDot) — associative, oracle-safe
           .withColumn("score",
-            graft.functions.LongVectorOps.dot(s, col("q_emb"), col("c_emb")))
+            graft.functions.LongVectorOps.dot(col("q_emb"), col("c_emb")))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("neighbor_id").asc)
         scored
@@ -1629,8 +1629,7 @@ object SimOps {
         // form is interpreted per element and dominated this row's cost;
         // integer sums are associative so the value (and the oracle's
         // list_sum) is unchanged
-        def sqdist(a: Column, b: Column): Column =
-          graft.functions.LongVectorOps.sqdist(s, a, b)
+        import graft.functions.LongVectorOps.sqdist
         val subDim = 16
         val nSub = 4
         val base = emb.select(col("vec_id"), q8(col("embedding")).as("qe"))
@@ -1767,20 +1766,19 @@ object SimOps {
           .withColumn("ue1024", transform(col("ue"), x => x * 1024))
           .crossJoin(cells)
           .withColumn("cd",
-            graft.functions.LongVectorOps.sqdist(s, col("ue1024"), col("cent")))
+            graft.functions.LongVectorOps.sqdist(col("ue1024"), col("cent")))
           .withColumn("rn", row_number().over(wAssign))
           .filter(col("rn") <= 2)
         val corpus = assign.filter(col("rn") === 1)
           .select(col("cell"), col("vec_id").as("neighbor_id"), col("ue").as("n_ue"))
         val queries = assign.filter(col("vec_id") % 50 === 0)
           .select(col("cell"), col("vec_id").as("query_id"), col("ue").as("q_ue"))
-        def sq(a: Column, b: Column): Column =
-          graft.functions.LongVectorOps.sqdist(s, a, b)
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("dist").asc, col("neighbor_id").asc)
         queries.join(corpus, "cell")
           .filter(col("query_id") =!= col("neighbor_id"))
-          .withColumn("dist", sq(col("q_ue"), col("n_ue")))
+          .withColumn("dist",
+            graft.functions.LongVectorOps.sqdist(col("q_ue"), col("n_ue")))
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 5)
           .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
@@ -2378,7 +2376,7 @@ object SimOps {
           // measured 8.8 s at sf0.1 / 92 s at ×10; the kernel is exact
           // integer math either way, so the oracle is unchanged
           .withColumn("score",
-            graft.functions.LongVectorOps.maxsim(s, col("q_emb"), col("c_emb"), 8))
+            graft.functions.LongVectorOps.maxsim(col("q_emb"), col("c_emb"), 8))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("doc_id").asc)
         scored
@@ -2517,7 +2515,7 @@ object SimOps {
             .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
               x => x.getField("m")).as("cent"))
             .select(col("label").as("cell"), col("cent")))
-        def cellScore = graft.functions.LongVectorOps.dot(s, col("qe"), col("cent"))
+        def cellScore = graft.functions.LongVectorOps.dot(col("qe"), col("cent"))
         val cWide = qemb.crossJoin(cb).withColumn("d", cellScore)
         val wc = Window.partitionBy(col("vec_id"))
           .orderBy(col("d").desc, col("cell").asc)
@@ -2532,7 +2530,7 @@ object SimOps {
         val scored = queries.join(corpus, Seq("cell"))
           .filter(col("query_id") =!= col("doc_id"))
           .withColumn("score",
-            graft.functions.LongVectorOps.maxsim(s, col("q_emb"), col("c_emb"), 8))
+            graft.functions.LongVectorOps.maxsim(col("q_emb"), col("c_emb"), 8))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("doc_id").asc)
         scored.withColumn("rank", row_number().over(w).cast("long"))

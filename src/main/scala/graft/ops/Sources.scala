@@ -1416,32 +1416,26 @@ object Sources {
     ),
     Q(
       "sink_renameless_commit",
-      // The S3-POSTURE commit on the real write path (round-12): with
-      // `option("commitMode", "renameless")` the DSv2 write publishes via
-      // conditional-put semantics — the version object itself is the
-      // claim (exclusive CREATE of its final name + a self-validating
-      // #commit footer), NO pointer file exists, and readers resolve
-      // state by listing version objects and taking the highest
-      // footer-valid one. This is the protocol that transfers to object
-      // stores, where the default path's tmp + ATOMIC_MOVE does not (S3
-      // has no rename): at 100 TB every landing table commits this way,
-      // and a committer crash mid-upload leaves an invalid object that
-      // readers skip and later committers reclaim, never a torn table.
-      // Two appends through the mode, plain read back (the read path
-      // falls back to list-and-validate when no pointer exists) — the
+      // The object-store commit on the real write path: the DSv2 write
+      // publishes via conditional-put semantics — the version object
+      // itself is the claim (exclusive CREATE of its final name + a
+      // self-validating #commit footer), no pointer file and no rename
+      // exist, and readers resolve state by listing version objects and
+      // taking the highest footer-valid one. This transfers to object
+      // stores, which have no rename: a committer crash mid-upload leaves
+      // an invalid object that readers skip and later committers
+      // reclaim, never a torn table. Two appends, plain read back — the
       // oracle is the identity, and ManifestSinkSpec races concurrent
-      // DataFrame writers through the same mode.
+      // DataFrame writers through the same path.
       (s, dir) => {
         val fmt = "graft.sources.ManifestSink"
         val t = tmpDir("graft_rnls_")
         val o = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         o.filter(col("o_orderkey") % 2 === 0)
-          .write.format(fmt).option("path", t)
-          .option("commitMode", "renameless").mode("append").save()
+          .write.format(fmt).option("path", t).mode("append").save()
         o.filter(col("o_orderkey") % 2 === 1)
-          .write.format(fmt).option("path", t)
-          .option("commitMode", "renameless").mode("append").save()
+          .write.format(fmt).option("path", t).mode("append").save()
         s.read.format(fmt).option("path", t).load()
           .orderBy(col("o_orderkey"))
       },
@@ -1451,7 +1445,7 @@ object Sources {
     Q(
       "sink_sync_point_read",
       // CROSS-TABLE ATOMIC SYNC POINT (r12 verdict #5) as an oracled
-      // read: two rename-less tables are committed round-by-round; after
+      // read: two tables are committed round-by-round; after
       // round 1 of BOTH, one catalog-level `sync.v1.json` object pins
       // (table → version) — then table A alone commits round 2,
       // simulating a reader arriving MID-SYNC of round 2. The consistent
@@ -1474,11 +1468,10 @@ object Sources {
           .select(col("o_orderkey"), col("o_totalprice"))
         def land(mod4: Int, path: String): Unit =
           o.filter(col("o_orderkey") % 4 === mod4)
-            .write.format(fmt).option("path", path)
-            .option("commitMode", "renameless").mode("append").save()
+            .write.format(fmt).option("path", path).mode("append").save()
         land(0, dirs(0)); land(1, dirs(1)) // round 1 of both tables
         val pins = dirs.map(d => d ->
-          graft.sources.ManifestSink.readStateRenameless(d).get._1).toMap
+          graft.sources.ManifestSink.latestVersion(d)).toMap
         graft.sources.ManifestSink.publishSyncPoint(cat, pins)
         land(2, dirs(0)) // table A's round 2 lands; NO sync point yet
         val (_, pinned) = graft.sources.ManifestSink.readSyncPoint(cat).get
@@ -1498,7 +1491,7 @@ object Sources {
       // that last processed sync point S_a catches up to S_b by reading,
       // PER TABLE, the CDF range (pin@S_a, pin@S_b] — every table
       // advances by exactly one consistent cross-table round set, never
-      // a mix. Fixture: two rename-less tables × three sync rounds;
+      // a mix. Fixture: two tables × three sync rounds;
       // consumer state = processed through S1; the pull reads each
       // table's batch change feed from its S1 pin +1 to its S3 pin and
       // must surface EXACTLY rounds 2–3 of both tables (the oracle's
@@ -1516,13 +1509,12 @@ object Sources {
         def land(tbl: String, round: Int): Unit =
           o.filter(col("o_orderkey") % 2 === (if (tbl == "a") 0 else 1) &&
               expr("(o_orderkey div 2) % 3") === round)
-            .write.format(fmt).option("path", dirs(tbl))
-            .option("commitMode", "renameless").mode("append").save()
+            .write.format(fmt).option("path", dirs(tbl)).mode("append").save()
         val syncs = (0 until 3).map { r =>
           Seq("a", "b").foreach(land(_, r))
           graft.sources.ManifestSink.publishSyncPoint(cat,
             dirs.values.map(d => d ->
-              graft.sources.ManifestSink.readStateRenameless(d).get._1).toMap)
+              graft.sources.ManifestSink.latestVersion(d)).toMap)
         }
         val (_, pinsA) = graft.sources.ManifestSink.readSyncPoint(
           cat, Some(syncs.head)).get
@@ -1560,13 +1552,12 @@ object Sources {
           .select(col("o_orderkey"), col("o_totalprice"))
         def land(mod4: Int, path: String): Unit =
           o.filter(col("o_orderkey") % 4 === mod4)
-            .write.format(fmt).option("path", path)
-            .option("commitMode", "renameless").mode("append").save()
+            .write.format(fmt).option("path", path).mode("append").save()
         (0 until 2).foreach { r =>
           land(r * 2, dirs(0)); land(r * 2 + 1, dirs(1)) // rounds r
           graft.sources.ManifestSink.publishSyncPoint(cat,
             dirs.map(d => d ->
-              graft.sources.ManifestSink.readStateRenameless(d).get._1).toMap)
+              graft.sources.ManifestSink.latestVersion(d)).toMap)
         }
         val (_, pinned) =
           graft.sources.ManifestSink.readSyncPoint(cat, Some(1)).get

@@ -318,7 +318,7 @@ object TextOps {
             posexplode(arrays_zip(
               split(col("text"), " "),
               transform(
-                graft.functions.PortableTokenHashes(s, col("text")),
+                graft.functions.PortableTokenHashes(col("text")),
                 h => h.bitwiseAND((1L << 31) - 1)))).as(Seq("pos", "z")))
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
             col("z.0").as("tok"), col("z.1").as("th"))
@@ -397,7 +397,7 @@ object TextOps {
         val k = 16
         val docs = Tables(s, dir, "documents")
         val tokHash = transform(
-          graft.functions.PortableTokenHashes(s, col("text")),
+          graft.functions.PortableTokenHashes(col("text")),
           h => h.bitwiseAND((1L << 31) - 1))
         val crcs = docs.select(col("doc_id").as("doc"), tokHash.as("crcs"))
         val sh = crcs.select(col("doc"), MinHash.shingleHashes(col("crcs")).as("sh"))
@@ -825,7 +825,7 @@ object TextOps {
             // the NATIVE fold expression (one fused Java loop per row);
             // value-identical to SimHash.portableTokenHashes, ~2.5× cheaper
             // at sf0.1 — the HOF form interprets a Column tree per character
-            hashFn = c => graft.functions.PortableTokenHashes(s, c))
+            hashFn = c => graft.functions.PortableTokenHashes(c))
           .withColumnRenamed("doc", "doc_id")
           .localCheckpoint(false)
         val ex = fp.select(col("doc_id"), col("fp"),
@@ -1212,7 +1212,7 @@ object TextOps {
         // HOF would dominate this row's cost
         val grams = Tables(s, dir, "documents")
           .select(col("doc_id"),
-            transform(graft.functions.PortableTokenHashes(s, col("text")),
+            transform(graft.functions.PortableTokenHashes(col("text")),
               h => h.bitwiseAND((1L << 31) - 1)).as("hs"))
           .filter(size(col("hs")) >= 3)
           .select(col("doc_id"), posexplode(expr(
@@ -3399,7 +3399,7 @@ object TextOps {
       (s, dir) => {
         val toks = Tables(s, dir, "documents")
           .select(col("doc_id"),
-            explode(graft.functions.PortableTokenHashes(s, col("text"))).as("packed"))
+            explode(graft.functions.PortableTokenHashes(col("text"))).as("packed"))
         toks
           // low half of the packed double-fold IS the m=131 portable hash
           .withColumn("bucket", pmod(col("packed") % 2147483648L, lit(16L)))

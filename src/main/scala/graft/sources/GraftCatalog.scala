@@ -19,9 +19,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * This is the remaining DSv2 integration point after the read connector,
   * the write connector, and the commit protocol: name resolution. At
   * scale the identifier→path map is a metastore call; here it is
-  * `warehouse/namespace/table`, and table EXISTENCE is manifest existence
-  * (an empty v1 manifest is written at CREATE — consistent with the
-  * format's "visibility = manifest" rule).
+  * `warehouse/namespace/table`. Table EXISTENCE is a committed version:
+  * the catalog asks [[ManifestSink]] to resolve the table exactly as a
+  * reader would (newest footer-valid `manifest.v<N>.json`), and CREATE
+  * commits an empty v1. Every DDL change (CREATE, ALTER) is an ordinary
+  * commit through the sink's one compare-and-swap, so catalog and
+  * DataFrame writers on one table never disagree on its protocol.
   *
   * Configure:
   *   spark.sql.catalog.<name> = graft.sources.GraftCatalog
@@ -44,12 +47,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def pathOf(ident: Identifier): String =
     (ident.namespace() :+ ident.name()).mkString(s"$warehouse/", "/", "")
 
+  private def exists(dir: String): Boolean = ManifestSink.latestVersion(dir) > 0
+
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = Paths.get(s"$warehouse/${namespace.mkString("/")}")
     if (!Files.isDirectory(ns)) throw new NoSuchNamespaceException(namespace)
     val s = Files.list(ns)
     try s.iterator().asScala
-      .filter(p => Files.exists(p.resolve("manifest.json")))
+      .filter(p => exists(p.toString))
       .map(p => Identifier.of(namespace, p.getFileName.toString))
       .toArray
     finally s.close()
@@ -77,10 +82,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // state through plain SQL before publish)
     version.toIntOption match {
       case Some(v) =>
-        if (!Files.exists(Paths.get(dir, s"manifest.v$v.json")))
-          throw new NoSuchTableException(ident)
-        val schema = ManifestSink.readState(dir, Some(v)).get.schema
-        new ManifestTable(dir, schema, pinnedVersion = Some(v))
+        // absent, expired, in-flight and torn versions all resolve to None
+        val st = ManifestSink.readState(dir, Some(v))
+          .getOrElse(throw new NoSuchTableException(ident))
+        new ManifestTable(dir, st.schema, pinnedVersion = Some(v))
       case None =>
         val st = ManifestSink.readBranchState(dir, version)
           .getOrElse(throw new NoSuchTableException(ident))
@@ -94,9 +99,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // TableCatalog contract (ADVICE r6): CREATE of an existing table must
     // throw, not silently reset the table's current manifest — direct API
     // use and DDL paths that skip the exists-check both land here
-    if (Files.exists(Paths.get(dir, "manifest.json")))
+    if (exists(dir))
       throw new TableAlreadyExistsException(ident)
-    // CREATE = publish an empty snapshot; existence IS the manifest
+    // CREATE = publish an empty snapshot; existence IS a committed version
     ManifestSink.writeManifest(dir, schema, Seq.empty)
     new ManifestTable(dir, schema)
   }
@@ -110,24 +115,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = pathOf(ident)
-    val prior = ManifestSink.readState(dir).getOrElse(
-      throw new NoSuchTableException(ident))
-    val newSchema = changes.foldLeft(prior.schema) {
-      case (sch, add: TableChange.AddColumn) =>
+    def widen(sch: StructType): StructType = changes.foldLeft(sch) {
+      case (acc, add: TableChange.AddColumn) =>
         require(add.fieldNames.length == 1,
           "only top-level ADD COLUMN is supported")
-        sch.add(StructField(add.fieldNames.head, add.dataType, nullable = true))
+        acc.add(StructField(add.fieldNames.head, add.dataType, nullable = true))
       case (_, other) =>
         throw new UnsupportedOperationException(
           s"ALTER TABLE change not supported: $other")
     }
-    ManifestSink.writeState(dir, prior.copy(schema = newSchema))
-    new ManifestTable(dir, newSchema)
+    // a read-modify-write commit: a racing writer's files are kept
+    val v = ManifestSink.commit(dir)((_, prior) =>
+      prior.map(p => p.copy(schema = widen(p.schema))))
+      .getOrElse(throw new NoSuchTableException(ident))
+    new ManifestTable(dir, ManifestSink.readState(dir, Some(v)).get.schema)
   }
 
   override def dropTable(ident: Identifier): Boolean = {
     val dir = Paths.get(pathOf(ident))
-    if (!Files.exists(dir.resolve("manifest.json"))) false
+    if (!exists(dir.toString)) false
     else {
       val walk = Files.walk(dir)
       try walk.sorted(java.util.Comparator.reverseOrder())
@@ -140,9 +146,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     // map filesystem preconditions to the TableCatalog contract exceptions
     // (ADVICE r6) instead of surfacing raw NoSuchFileException
-    if (!Files.exists(Paths.get(pathOf(oldIdent), "manifest.json")))
+    if (!exists(pathOf(oldIdent)))
       throw new NoSuchTableException(oldIdent)
-    if (Files.exists(Paths.get(pathOf(newIdent), "manifest.json")))
+    if (exists(pathOf(newIdent)))
       throw new TableAlreadyExistsException(newIdent)
     Files.createDirectories(Paths.get(pathOf(newIdent)).getParent)
     Files.move(Paths.get(pathOf(oldIdent)), Paths.get(pathOf(newIdent)))

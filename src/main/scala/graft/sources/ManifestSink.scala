@@ -20,24 +20,28 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 WRITE path (§2.12 extension surface) with an explicit
-  * two-phase commit protocol — the property that makes distributed writes
-  * correct at 100 TB, made visible and testable:
+  * two-phase commit protocol that needs no rename, so it holds on object
+  * storage as well as on a local filesystem:
   *
   *  1. each task writes its rows to `data/<uuid>.tsv` (unique name — a
   *     speculative or retried attempt can never collide), then its task
   *     commit RETURNS the file name inside the [[WriterCommitMessage]];
-  *  2. only the DRIVER's job commit publishes: it writes `manifest.json`
-  *     listing exactly the committed files (tmp file + ATOMIC_MOVE, so
-  *     readers see the old manifest or the new one, never half of one);
-  *  3. reads resolve through the manifest — orphan files from failed,
-  *     aborted, or zombie attempts sit in `data/` but are INVISIBLE,
-  *     which is exactly-once visibility without any rename-into-place
-  *     coordination (the S3-friendly commit pattern).
+  *  2. only the DRIVER's job commit publishes: it creates version object
+  *     `manifest.v<N>.json` exclusively (`CREATE_NEW`, the local analog of
+  *     an object store's conditional put), listing exactly the committed
+  *     files and ending in a `#commit:<sha256(body)>` footer. The exclusive
+  *     create is the claim: a competing committer of version N loses,
+  *     re-reads and retries at N+1. There is no pointer file;
+  *  3. reads resolve by listing version objects and taking the newest one
+  *     whose footer verifies — an object that is still being written, or
+  *     was torn by a crash, is skipped. Orphan files from failed, aborted
+  *     or zombie attempts sit in `data/` but are INVISIBLE: exactly-once
+  *     visibility without any rename-into-place coordination.
   *
-  * `mode("append")` folds the previous manifest's file list into the new
+  * `mode("append")` folds the previous version's file list into the new
   * one; `mode("overwrite")` (→ [[SupportsTruncate]]) starts fresh. Every
-  * publish is also a retained `manifest.v<N>` snapshot (time travel via
-  * the `versionAsOf` read option); compaction = read + overwrite, a new
+  * version object is a retained snapshot (time travel via the
+  * `versionAsOf` read option); compaction = read + overwrite, a new
   * snapshot listing fewer files while history stays readable.
   *
   * Row-level SQL (MERGE / UPDATE / DELETE) is MERGE-ON-READ via
@@ -53,12 +57,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * schema travels inside the manifest. Row-id column for deletes = the
   * FIRST column, which must be BIGINT.
   *
-  * Concurrency contract: SINGLE WRITER per table path. The append path is
-  * a manifest read-modify-write, so two simultaneous jobs appending to
-  * the same path can lose one job's files (the same reason Delta layers
-  * optimistic concurrency + retry on top of this exact commit shape).
-  * Streaming micro-batches satisfy the contract naturally — one query,
-  * sequential batches — which is the sink's target workload.
+  * Concurrency: any number of committers per table path. Every committer
+  * runs the same read-rebase-retry loop ([[ManifestSink.commit]]) over
+  * the one compare-and-swap ([[ManifestSink.casWriteState]]), so a lost
+  * race stacks on the winner's snapshot instead of dropping it.
   */
 class ManifestSink extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -131,78 +133,28 @@ object ManifestSink {
     * `#s:<min>:<max>` with first-column stats or `#s:<min>:<max>:<rows>`
     * when the writer also recorded the file's row count (the third field
     * feeds metadata-only COUNT pushdown; two-field suffixes stay valid).
+    * A version object ends in a `#commit:<sha256>` footer line.
+    *
+    * `versionAsOf = Some(v)` reads exactly version object v; an absent,
+    * in-flight or torn object (no footer, or a footer that does not
+    * verify) reads as None — "version not (yet) readable". `None` reads
+    * the latest committed version ([[readLatest]]).
     */
   def readState(dir: String, versionAsOf: Option[Int] = None): Option[State] =
     versionAsOf match {
       case Some(v) =>
-        // ADVICE r12 (medium #2): versioned reads must NOT bypass footer
-        // validation. Rename-less version objects are written in place
-        // non-atomically, so a concurrent CDF plan or versionAsOf read
-        // could parse a half-written object as state. Resolution rule:
-        // an object CARRYING a footer is accepted only if the footer
-        // verifies; an object WITHOUT a footer is accepted only on a
-        // pointer-ful table (whose v-files land via ATOMIC_MOVE and are
-        // never torn). On a pointer-less table a footer-less object is
-        // in-flight or torn — callers see "version not (yet) readable",
-        // same as a reader listing mid-commit.
-        val p = Paths.get(dir, s"manifest.v$v.json")
-        if (!Files.exists(p)) None
-        else validRenamelessBody(p) match {
-          case Some(body) => parseStateLines(body.split("\n", -1).toSeq)
-          case None =>
-            val raw = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-            if (raw.contains("\n#commit:")) None // footer present but wrong: torn
-            // a footer-less object is trustworthy iff it landed via the
-            // pointer-ful protocol's ATOMIC_MOVE. The pointer itself LAGS
-            // the v-file (claim → v-file → pointer), so checking only
-            // manifest.json opens a lost-commit window: a racer reading
-            // the just-moved v-file saw None here, fell back to empty
-            // state, and its winning CAS dropped the first commit's files
-            // (caught live by the delta-vs-append race spec). The
-            // `.claim.v<v>` marker is the protocol discriminator that
-            // does NOT lag — only casWriteState creates claims, and the
-            // claim always precedes its v-file.
-            else if (tableIsPointerFul(dir) ||
-                Files.exists(Paths.get(dir, s".claim.v$v")))
-              parseStateLines(raw.split("\n", -1).toSeq)
-            else None
-        }
-      case None =>
-        // pointer file first (the rename-ful protocol); a table whose
-        // commits are all rename-less has NO pointer — resolve by listing
-        // version objects and footer-validating, exactly like its readers
-        // (the pointer is an optimization, never the source of truth)
-        parseState(Paths.get(dir, "manifest.json"))
-          .orElse(readStateRenameless(dir).map(_._2))
+        validBody(Paths.get(dir, s"manifest.v$v.json")).flatMap(parseBody)
+      case None => readLatest(dir).map(_._2)
     }
-
-  /** True iff the table publishes through the rename-ful (pointer)
-    * protocol: `manifest.json` exists. Both protocols maintain their
-    * invariant from the first commit — casWriteState always lands the
-    * pointer, casWriteStateRenameless never creates one — so pointer
-    * presence identifies the table's established commit mode.
-    */
-  private[sources] def tableIsPointerFul(dir: String): Boolean =
-    Files.exists(Paths.get(dir, "manifest.json"))
-
-  /** The commit protocol this table is already committed to:
-    * Some(false) = pointer-ful, Some(true) = rename-less (no pointer but
-    * at least one footer-valid version object), None = virgin table
-    * (first committer's choice). ADVICE r12 (medium #1): the two claim
-    * mechanisms cannot arbitrate against each other, so every committer
-    * must detect the established mode and route through the matching CAS
-    * instead of publishing a commit the other side's readers skip as torn.
-    */
-  private[sources] def establishedCommitMode(dir: String): Option[Boolean] =
-    if (tableIsPointerFul(dir)) Some(false)
-    else if (readStateRenameless(dir).isDefined) Some(true)
-    else None
 
   private def parseState(p: java.nio.file.Path): Option[State] = {
     if (!Files.exists(p)) None
     else parseStateLines(
       Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq)
   }
+
+  private def parseBody(body: String): Option[State] =
+    parseStateLines(body.split("\n", -1).toSeq)
 
   private def parseStateLines(lines: Seq[String]): Option[State] = {
     {
@@ -226,9 +178,6 @@ object ManifestSink {
         }
       }
       lines.tail.filter(_.nonEmpty).foreach {
-        // a rename-less version object carries a trailing integrity
-        // footer — metadata, not a file entry
-        case c if c.startsWith("#commit:") => ()
         case g if g.startsWith("#gen:") => gen = g.stripPrefix("#gen:").toLong
         case t if t.startsWith("#txn:") => txns += t.stripPrefix("#txn:")
         case d if d.startsWith("#del:") =>
@@ -265,91 +214,31 @@ object ManifestSink {
         }))
       .mkString("\n").getBytes(StandardCharsets.UTF_8)
 
-  // serializes check-then-move on the current pointer so a slow loser of
-  // the version race can never regress manifest.json to an older snapshot
-  // (in-JVM — which is where Spark driver commits race; see casWriteState)
-  private val pointerLock = new Object
-
-  /** Optimistic-concurrency commit (r8 verdict item 3): publish `state` as
-    * snapshot v(expected+1) IFF no competing writer claimed that version
-    * first. The claim is an O_EXCL exclusive create of a zero-byte
-    * `.claim.v<N>` marker — the one filesystem primitive that is
-    * atomically exclusive — after which the v-file and current pointer
-    * land via tmp + ATOMIC_MOVE exactly as before (ADVICE r6: readers
-    * resolve v-files directly, so snapshots must never be torn). Returns
-    * false when the slot was already claimed: the caller must RE-READ
-    * state (rebase its appends onto the winner's snapshot) and retry at
-    * the new latest version — the same read-validate-retry loop Iceberg
-    * and Delta run on their pointer CAS. Claim markers are never deleted;
-    * they also pin version numbers against reuse after expireSnapshots.
-    * The pointer update itself is guarded so a delayed loser never moves
-    * manifest.json backwards past a newer committed snapshot.
-    */
-  def casWriteState(dir: String, expectedVersion: Int, state: State): Boolean = {
-    Files.createDirectories(Paths.get(dir))
-    val next = expectedVersion + 1
-    try Files.createFile(Paths.get(dir, s".claim.v$next"))
-    catch { case _: java.nio.file.FileAlreadyExistsException => return false }
-    val body = stateBody(state)
-    val vtmp = Paths.get(dir, s".manifest.${util.UUID.randomUUID()}.tmp")
-    Files.write(vtmp, body)
-    Files.move(vtmp, Paths.get(dir, s"manifest.v$next.json"),
-      StandardCopyOption.ATOMIC_MOVE)
-    pointerLock.synchronized {
-      // only advance the pointer if we are still the newest snapshot — a
-      // concurrent winner of v(next+1) owns (or already did) the pointer
-      if (latestVersion(dir) <= next) {
-        val tmp = Paths.get(dir, s".manifest.${util.UUID.randomUUID()}.tmp")
-        Files.write(tmp, body)
-        Files.move(tmp, Paths.get(dir, "manifest.json"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    true
-  }
-
-  /** Single-writer publish: retries the CAS until it lands. Callers whose
-    * state does NOT depend on the prior snapshot (branch publish, full
-    * overwrite) can use this directly; read-modify-write committers must
-    * run their own loop that re-reads between attempts (see
-    * ManifestBatchWrite.commit).
-    */
-  def writeState(dir: String, state: State): Unit = {
-    var done = false
-    while (!done) {
-      done = casWriteState(dir, latestVersion(dir), state)
-      // a lost CAS whose winner hasn't moved its v-file yet leaves
-      // latestVersion unchanged for a moment — back off, don't hot-spin
-      if (!done) Thread.sleep(1)
-    }
-  }
-
-  // ---- rename-less commit (r10 verdict #6: the real S3 posture) ----
-  // S3 has NO atomic rename, so tmp + ATOMIC_MOVE (the local protocol
-  // above) does not transfer. What S3 does have: atomic full-object PUT
-  // and conditional put (If-None-Match) — so in this mode the version
-  // object ITSELF is the claim, written directly at its final name under
-  // an exclusive CREATE_NEW (the conditional-put analog; a competing
-  // committer's create fails atomically). Local filesystems, unlike S3's
-  // all-or-nothing PUT, make content visible as it streams — so the
-  // object is SELF-VALIDATING: the last line is `#commit:<sha256(body)>`
-  // and a reader treats a file with a missing/wrong footer as in-flight
-  // and skips it. There is NO current pointer at all: readers resolve
-  // state by listing version objects and taking the highest VALID one
-  // (the pointer file of the rename-ful protocol is an optimization,
-  // never the source of truth — Iceberg's version-hint posture on S3).
-  // ManifestSinkSpec races concurrent committers through this path and
-  // proves exactly-once visibility with zero renames.
+  // ---- the commit protocol ----
+  // Object storage has NO atomic rename, so a commit cannot write a temp
+  // file and move it into place. What it has is an atomic full-object PUT
+  // and a conditional put (If-None-Match), so the version object ITSELF
+  // is the claim: it is written directly at its final name under an
+  // exclusive CREATE_NEW (a competing committer's create fails
+  // atomically). Local files, unlike an all-or-nothing PUT, make content
+  // visible as it streams, so the object is SELF-VALIDATING: the last line
+  // is `#commit:<sha256(body)>`, and a reader treats an object with a
+  // missing or wrong footer as in-flight and skips it. Readers resolve
+  // state by listing version objects and taking the newest valid one.
 
   private def sha256Hex(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(b)
       .map("%02x".format(_)).mkString
 
-  /** The body text of a renameless version object IFF its `#commit:`
-    * footer is present and matches — None for absent, torn, or in-flight
-    * objects (which readers skip and committers may reclaim).
+  /** `body` followed by its `#commit:` footer line. */
+  private def sealedPayload(body: Array[Byte]): Array[Byte] =
+    body ++ s"\n#commit:${sha256Hex(body)}".getBytes(StandardCharsets.UTF_8)
+
+  /** The body text of a version object IFF its `#commit:` footer is
+    * present and matches — None for absent, torn, or in-flight objects
+    * (which readers skip and committers may reclaim).
     */
-  private def validRenamelessBody(p: java.nio.file.Path): Option[String] = {
+  private def validBody(p: java.nio.file.Path): Option[String] = {
     if (!Files.exists(p)) return None
     val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     val cut = text.lastIndexOf("\n#commit:")
@@ -362,49 +251,83 @@ object ManifestSink {
     }
   }
 
+  /** `<prefix>.v<N>.json` objects under `dir`, newest first. */
+  private def versionObjects(dir: String, prefix: String)
+      : Seq[(Int, java.nio.file.Path)] = {
+    val d = Paths.get(dir)
+    if (!Files.isDirectory(d)) return Seq.empty
+    val vPat = s"$prefix\\.v(\\d+)\\.json".r
+    val listing = Files.list(d)
+    try listing.iterator().asScala.flatMap { p =>
+      p.getFileName.toString match {
+        case vPat(n) => Some(n.toInt -> p)
+        case _ => None
+      }
+    }.toSeq.sortBy(-_._1)
+    finally listing.close()
+  }
+
+  /** Newest footer-valid version object: (version, body text). Scans
+    * from the newest object and stops at the first valid one.
+    */
+  private def newestValid(dir: String): Option[(Int, String)] =
+    versionObjects(dir, "manifest").iterator
+      .flatMap { case (v, p) => validBody(p).map(v -> _) }
+      .nextOption()
+
+  /** Resolve (version, state) of the latest committed version: the newest
+    * version object whose footer verifies. O(objects) listing like every
+    * object-store manifest; None when no valid version exists yet.
+    */
+  def readLatest(dir: String): Option[(Int, State)] =
+    newestValid(dir).flatMap { case (v, body) => parseBody(body).map(v -> _) }
+
+  /** Latest committed version, 0 if none. Only footer-VALID objects count:
+    * an in-flight object must not let a CDF plan or stream offset advance
+    * past a version whose content is not readable yet.
+    */
+  def latestVersion(dir: String): Int = newestValid(dir).map(_._1).getOrElse(0)
+
   // serializes the torn-slot reclaim below: the overwrite of an invalid
   // claim is NOT atomic (unlike the CREATE_NEW claim itself), so in-JVM
   // racers — where Spark driver commits race — take a lock around
   // re-validate + truncate-write; CROSS-PROCESS racers (two Spark apps on
-  // one table — ADVICE r12 low #3) additionally serialize on an OS-level
-  // FileLock over a sidecar file, acquired inside the JVM lock (JVM-level
-  // first, or two threads of one process would throw
-  // OverlappingFileLockException instead of queueing).
+  // one table) additionally serialize on an OS-level FileLock over a
+  // sidecar file, acquired inside the JVM lock (JVM-level first, or two
+  // threads of one process would throw OverlappingFileLockException
+  // instead of queueing).
   private val reclaimLock = new Object
 
   /** A claim younger than this is never reclaimed: a LIVE writer paused
-    * mid-write (GC, scheduler stall) keeps a fresh mtime far longer than
-    * the old 20 ms size-stability window could prove — stealing its valid
-    * in-flight claim double-committed the version (ADVICE r12 low #3).
-    * A corpse's mtime only ages. Spec-visible so tests can backdate.
+    * mid-write (GC, scheduler stall) keeps a fresh mtime far longer than a
+    * short size-stability window could prove, and stealing its valid
+    * in-flight claim would double-commit the version. A corpse's mtime
+    * only ages. Spec-visible so tests can backdate.
     */
   val reclaimGraceMs = 5000L
 
-  /** Conditional-put commit of `state` as version expected+1. Returns
-    * false iff the slot was already claimed by a VALID competing commit —
-    * the caller re-reads and rebases exactly like [[casWriteState]]'s
-    * contract.
+  /** Compare-and-swap commit of `state` as version expected+1. Returns
+    * false iff the slot was already claimed by a VALID competing commit
+    * or by one still in flight: the caller must RE-READ state (rebase its
+    * changes onto the winner's snapshot) and retry at the new latest
+    * version — the read-validate-retry loop of [[commit]].
     *
-    * Torn-slot reclaim (ADVICE r11): a committer that crashes between
-    * CREATE_NEW and the footer write leaves a claimed-but-invalid object.
-    * Readers skip it, so without reclaim every later commit of this
-    * version computes the same expected version, loses the CREATE_NEW
-    * race to a corpse, and the table livelocks. On REAL S3 this state
-    * cannot exist — a conditional PUT is all-or-nothing, the crash leaves
-    * no object at all and the next CREATE succeeds — so the reclaim path
-    * is purely local-simulation repair for the one way local files are
-    * weaker than S3 PUT (content visible mid-stream). A claim is
-    * reclaimed only when its bytes are footer-invalid AND stable across a
-    * grace re-check (a live writer mid-stream grows the file; a corpse
-    * never does), and the overwrite is serialized in-JVM.
+    * Torn-slot reclaim: a committer that crashes between CREATE_NEW and
+    * the footer write leaves a claimed-but-invalid object. Readers skip
+    * it, so without reclaim every later commit of this version computes
+    * the same expected version, loses the CREATE_NEW race to a corpse,
+    * and the table livelocks. On object storage this state cannot exist —
+    * a conditional PUT is all-or-nothing, the crash leaves no object at
+    * all — so the reclaim is repair for the one way local files are
+    * weaker than a PUT (content visible mid-stream). A claim is reclaimed
+    * only when its bytes are footer-invalid, its mtime is past
+    * [[reclaimGraceMs]], and it stays unchanged across a re-check under
+    * JVM + OS file locks.
     */
-  def casWriteStateRenameless(
-      dir: String, expectedVersion: Int, state: State): Boolean = {
+  def casWriteState(dir: String, expectedVersion: Int, state: State): Boolean = {
     Files.createDirectories(Paths.get(dir))
     val next = expectedVersion + 1
-    val body = stateBody(state)
-    val payload = body ++
-      s"\n#commit:${sha256Hex(body)}".getBytes(StandardCharsets.UTF_8)
+    val payload = sealedPayload(stateBody(state))
     val p = Paths.get(dir, s"manifest.v$next.json")
     val ch =
       try Files.newByteChannel(p,
@@ -419,7 +342,7 @@ object ManifestSink {
           // stays invalid and size-stable across a re-check, all under
           // JVM + OS file locks so no two reclaimers interleave their
           // non-atomic truncate-writes.
-          if (validRenamelessBody(p).isDefined) return false
+          if (validBody(p).isDefined) return false
           val mtime0 =
             try Files.getLastModifiedTime(p).toMillis
             catch { case _: java.io.IOException => Long.MaxValue }
@@ -437,7 +360,7 @@ object ManifestSink {
                 // re-validate UNDER the locks: another process may have
                 // reclaimed and completed this slot while we waited
                 val stillTorn = Files.exists(p) &&
-                  validRenamelessBody(p).isEmpty &&
+                  validBody(p).isEmpty &&
                   (try Files.size(p) == size0 &&
                     Files.getLastModifiedTime(p).toMillis == mtime0
                   catch { case _: java.io.IOException => false })
@@ -457,56 +380,61 @@ object ManifestSink {
     true
   }
 
-  /** Resolve (version, state) by listing version objects, newest first,
-    * skipping any whose commit footer is absent or wrong (in-flight or
-    * torn) — the rename-less read path. O(objects) listing like every
-    * S3 manifest store; None when no valid version exists yet.
+  /** The one read-rebase-retry commit loop: resolve the latest committed
+    * (version, state), let `next` build its successor from it, and CAS
+    * that in at version+1. On a lost slot, re-resolve and retry, so a
+    * concurrent winner's snapshot is stacked on, never dropped. Prior
+    * state and CAS expectation always come from the same resolution.
+    * `next` returning None publishes nothing (an idempotent replay).
+    * Returns the committed version, or None when nothing was published.
     */
-  def readStateRenameless(dir: String): Option[(Int, State)] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return None
-    val vPat = "manifest\\.v(\\d+)\\.json".r
-    val listing = Files.list(d)
-    val versions =
-      try listing.iterator().asScala.flatMap { p =>
-        p.getFileName.toString match {
-          case vPat(n) => Some(n.toInt -> p)
-          case _ => None
-        }
-      }.toSeq.sortBy(-_._1)
-      finally listing.close()
-    versions.iterator.flatMap { case (v, p) =>
-      validRenamelessBody(p)
-        .flatMap(bodyTxt => parseStateLines(bodyTxt.split("\n", -1).toSeq))
-        .map(v -> _)
-    }.nextOption()
+  @annotation.tailrec
+  def commit(dir: String)(next: (Int, Option[State]) => Option[State]): Option[Int] = {
+    val (expected, prior) = readLatest(dir) match {
+      case Some((v, st)) => (v, Some(st))
+      case None => (0, None)
+    }
+    next(expected, prior) match {
+      case None => None
+      case Some(st) if casWriteState(dir, expected, st) => Some(expected + 1)
+      case Some(_) =>
+        // the winner may still be writing its object: back off, don't hot-spin
+        Thread.sleep(1)
+        commit(dir)(next)
+    }
   }
 
-  // ---- cross-table atomic sync point (r12 verdict #5) ----
+  /** Publish `state` as the next version regardless of the prior one
+    * (branch publish, clone, schema change built by the caller).
+    */
+  def writeState(dir: String, state: State): Unit = {
+    commit(dir)((_, _) => Some(state)); ()
+  }
+
+  // ---- cross-table atomic sync point ----
   // The replica's per-table commits are each atomic, but a consumer
   // reading TWO tables mid-sync could still observe table A at round N
   // and table B at round N−1. The sync point is a catalog-level
   // manifest-of-manifests: one footer-validated `sync.v<N>.json` object
   // pinning (table dir → version) for every table of a round, published
-  // through the SAME conditional-put CAS as rename-less table commits.
-  // A consistent reader resolves the latest valid sync object and reads
-  // every table `versionAsOf` its pin — the round becomes visible
-  // all-or-nothing, and ReplicaSoak's concurrent reader proves the
-  // torn-read count is zero under racing writers while the direct
-  // (pointer-chasing) reader observes real tears at the same instants.
+  // through the SAME conditional-put claim as table commits. A consistent
+  // reader resolves the latest valid sync object and reads every table
+  // `versionAsOf` its pin — the round becomes visible all-or-nothing, and
+  // ReplicaSoak's concurrent reader proves the torn-read count is zero
+  // under racing writers while the direct (latest-version) reader
+  // observes real tears at the same instants.
 
   /** Valid sync point: (sync version, table dir → pinned table version).
     * `versionAsOf = None` resolves the LATEST footer-valid sync object
-    * (list + validate, identical to [[readStateRenameless]] — no
-    * pointer, safe on S3 semantics); `Some(v)` resolves exactly sync
-    * version v — the historical CONSISTENT cross-table snapshot, the
-    * catalog-level analog of a table's `versionAsOf` time travel. A
-    * torn or absent v yields None, never a half-read pin set.
+    * (list + validate, exactly like [[readLatest]]); `Some(v)` resolves
+    * exactly sync version v — the historical CONSISTENT cross-table
+    * snapshot, the catalog-level analog of a table's `versionAsOf` time
+    * travel. A torn or absent v yields None, never a half-read pin set.
     */
   def readSyncPoint(catalogDir: String,
       versionAsOf: Option[Int] = None): Option[(Int, Map[String, Int])] = {
     def parse(v: Int, p: java.nio.file.Path): Option[(Int, Map[String, Int])] =
-      validRenamelessBody(p).map { body =>
+      validBody(p).map { body =>
         v -> body.split("\n", -1).filter(_.nonEmpty).map { line =>
           val i = line.indexOf(':')
           line.substring(i + 1) -> line.substring(0, i).toInt
@@ -515,37 +443,24 @@ object ManifestSink {
     versionAsOf match {
       case Some(v) => parse(v, Paths.get(catalogDir, s"sync.v$v.json"))
       case None =>
-        val d = Paths.get(catalogDir)
-        if (!Files.isDirectory(d)) return None
-        val vPat = "sync\\.v(\\d+)\\.json".r
-        val listing = Files.list(d)
-        val versions =
-          try listing.iterator().asScala.flatMap { p =>
-            p.getFileName.toString match {
-              case vPat(n) => Some(n.toInt -> p)
-              case _ => None
-            }
-          }.toSeq.sortBy(-_._1)
-          finally listing.close()
-        versions.iterator.flatMap { case (v, p) => parse(v, p) }.nextOption()
+        versionObjects(catalogDir, "sync").iterator
+          .flatMap { case (v, p) => parse(v, p) }.nextOption()
     }
   }
 
   /** Conditional-put publish of a sync point at version expected+1 —
-    * same CREATE_NEW + footer protocol as [[casWriteStateRenameless]],
-    * same loss semantics (false = a competing coordinator won the slot;
-    * re-read and retry). No torn-slot reclaim here: sync coordinators
-    * are one-per-round by construction, and a skipped slot just means
-    * the next publish claims the following number.
+    * same CREATE_NEW + footer claim as [[casWriteState]], same loss
+    * semantics (false = a competing coordinator won the slot; re-read and
+    * retry). No torn-slot reclaim here: sync coordinators are
+    * one-per-round by construction, and a skipped slot just means the
+    * next publish claims the following number.
     */
   def casPublishSyncPoint(catalogDir: String, expected: Int,
       pins: Map[String, Int]): Boolean = {
     Files.createDirectories(Paths.get(catalogDir))
-    val body = pins.toSeq.sortBy(_._1)
+    val payload = sealedPayload(pins.toSeq.sortBy(_._1)
       .map { case (dir, v) => s"$v:$dir" }.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)
-    val payload = body ++
-      s"\n#commit:${sha256Hex(body)}".getBytes(StandardCharsets.UTF_8)
+      .getBytes(StandardCharsets.UTF_8))
     val p = Paths.get(catalogDir, s"sync.v${expected + 1}.json")
     val ch =
       try Files.newByteChannel(p,
@@ -572,11 +487,11 @@ object ManifestSink {
   }
 
   // ---- write-audit-publish branches (the Iceberg WAP pattern) ----
-  // A branch is a SECOND pointer file over the same data dir: staged
+  // A branch is a pointer file over the same data dir: staged
   // commits land on `manifest.branch-<name>.json` (atomic move, no
-  // v-snapshot), main readers never see them, and publish atomically
-  // promotes the branch state to a REAL commit (v-snapshot + current
-  // pointer) then drops the branch. Data files are shared, so a branch
+  // version object), main readers never see them, and publish promotes
+  // the branch state to a REAL commit (the next version object) then
+  // drops the branch. Data files are shared, so a branch
   // is O(pointer), never a copy — and an abandoned branch's files are
   // exactly what `vacuum` already reclaims (referenced by no snapshot).
 
@@ -613,11 +528,11 @@ object ManifestSink {
     Files.deleteIfExists(branchPath(dir, branch)); ()
   }
 
-  /** Legacy helper: publish `files` as a fresh snapshot at the next seq. */
+  /** Publish `files` as a fresh snapshot at the next seq. */
   def writeManifest(dir: String, schema: StructType, files: Seq[String],
       txns: Set[String] = Set.empty): Unit = {
-    val seq = latestVersion(dir) + 1
-    writeState(dir, State(schema, files.map((_, seq)), Seq.empty, txns))
+    commit(dir)((v, _) =>
+      Some(State(schema, files.map((_, v + 1)), Seq.empty, txns))); ()
   }
 
   /** File-token → path: bare tokens live under the table's own `data/`;
@@ -663,34 +578,23 @@ object ManifestSink {
     * forward from the CURRENT state, not `v`: txn ids (a replayed
     * idempotent batch is still a replay after a rollback) and the writer
     * generation (fencing must survive — a zombie writer can't sneak back
-    * in by restoring). Routes through the table's ESTABLISHED commit
-    * protocol (pointer CAS vs rename-less footer CAS — the r12
-    * arbitration rule: publishing via the wrong protocol is invisible to
-    * the other side's readers). Returns the new version number.
+    * in by restoring). Returns the new version number.
     */
   def restoreVersion(dir: String, v: Int): Int = {
     val target = readState(dir, Some(v)).getOrElse(
       throw new IllegalStateException(
         s"restore: version $v not readable at $dir (expired or in-flight)"))
-    var committed = -1
-    while (committed < 0) {
-      val cur = latestVersion(dir)
-      val curState = readState(dir).getOrElse(
+    commit(dir) { (_, prior) =>
+      val cur = prior.getOrElse(
         throw new IllegalStateException(s"restore: no current state at $dir"))
-      val next = State(target.schema, target.files, target.deletes,
-        curState.txns, target.stats, target.counts, curState.generation)
-      val ok = establishedCommitMode(dir) match {
-        case Some(true) => casWriteStateRenameless(dir, cur, next)
-        case _ => casWriteState(dir, cur, next)
-      }
-      if (ok) committed = cur + 1 else Thread.sleep(1)
-    }
-    committed
+      Some(State(target.schema, target.files, target.deletes,
+        cur.txns, target.stats, target.counts, cur.generation))
+    }.get
   }
 
   /** Snapshot EXPIRATION — the retention half of maintenance: delete
     * retained snapshot files older than the newest `keepLast` versions
-    * (the current pointer is never touched). Time travel to an expired
+    * (the latest version is never touched). Time travel to an expired
     * version then fails, and a following [[vacuum]] reclaims the data
     * files only expired snapshots referenced — expiration bounds the
     * storage the time-travel log can pin, exactly Iceberg's
@@ -733,7 +637,6 @@ object ManifestSink {
     val referenced = (1 to latestVersion(dir))
       .flatMap(v => readState(dir, Some(v)).toSeq)
       .flatMap(st => st.files.map(_._1) ++ st.deletes.map(_._1)).toSet ++
-      readState(dir).toSeq.flatMap(st => st.files.map(_._1) ++ st.deletes.map(_._1)) ++
       branchStates.flatMap(st => st.files.map(_._1) ++ st.deletes.map(_._1))
     val dataDir = Paths.get(dir, "data")
     if (!Files.isDirectory(dataDir)) return (0, 0)
@@ -826,7 +729,7 @@ object ManifestSink {
       .collect { case (f, _) if !seenDel(f) => f }
     // _commit_version attribution (ADVICE r14, low #5): the manifest
     // RECORDS each file's commit sequence at write time (`seq =
-    // expected + 1` in both CAS paths, i.e. seq IS the commit version),
+    // expected + 1` in the commit loop, i.e. seq IS the commit version),
     // so attribution reads the exact version from the state-at-b
     // metadata — zero extra manifest walks, and retention expiring a
     // mid-range snapshot can never shift an event's version forward
@@ -857,46 +760,6 @@ object ManifestSink {
       ChangeFeedPartition(resolveData(dir, f), isDelete = true,
         version = attribute(f, seqDel(f), isDelete = true)): InputPartition)
     (inserts ++ deletes).toArray
-  }
-
-  /** Highest retained snapshot version, 0 if none. On a POINTER-LESS
-    * (rename-less) table only footer-VALID version objects count (ADVICE
-    * r12 medium #2): version objects there are written in place
-    * non-atomically, so counting a half-written object would let a CDF
-    * plan or stream offset permanently advance past a version whose
-    * content wasn't readable yet. Pointer-ful tables keep the raw count —
-    * their v-files land via ATOMIC_MOVE and a claimed-but-unmoved slot
-    * must still pin the number against reuse.
-    */
-  def latestVersion(dir: String): Int = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) 0
-    else {
-      val s = Files.list(d)
-      val named =
-        try s.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case n if n.startsWith("manifest.v") && n.endsWith(".json") =>
-            n.stripPrefix("manifest.v").stripSuffix(".json").toInt }
-          .toSeq
-        finally s.close()
-      if (named.isEmpty) 0
-      else if (tableIsPointerFul(dir)) named.max
-      else {
-        val valid = named.filter(v =>
-          validRenamelessBody(Paths.get(dir, s"manifest.v$v.json")).isDefined)
-        if (valid.nonEmpty) valid.max
-        // no pointer AND no valid object: either a rename-less table whose
-        // only object is torn (count 0 — the reclaim path owns that slot)
-        // or a POINTER-FUL first commit crashed between v-file move and
-        // pointer write. The two differ by the claim marker: only the
-        // pointer-ful protocol creates `.claim.v<N>`, so its presence
-        // keeps the raw count and recovery can claim the next slot.
-        else if (Files.exists(Paths.get(dir, s".claim.v${named.max}")))
-          named.max
-        else 0
-      }
-    }
   }
 
   private[sources] def encode(row: InternalRow, schema: StructType): String =
@@ -1022,7 +885,6 @@ private[sources] class ManifestTable(dir: String, writeSchema: StructType,
       Option(info.options.get("clusterBy")),
       Option(info.options.get("sortBy")),
       Option(info.options.get("numPartitions")),
-      Option(info.options.get("commitMode")),
       Option(info.options.get("writerGeneration")).map(_.toLong))
 
   /** Row-level SQL (MERGE / UPDATE / DELETE) as a DELTA operation
@@ -1495,8 +1357,7 @@ private[sources] class ManifestReaderFactory(schema: StructType)
 private[sources] class ManifestWriteBuilder(dir: String, schema: StructType,
     txnId: Option[String], branch: Option[String] = None,
     clusterBy: Option[String] = None, sortBy: Option[String] = None,
-    numPartitions: Option[String] = None, commitMode: Option[String] = None,
-    writerGeneration: Option[Long] = None)
+    numPartitions: Option[String] = None, writerGeneration: Option[Long] = None)
     extends WriteBuilder with SupportsTruncate {
   private var isTruncate = false
   override def truncate(): WriteBuilder = { isTruncate = true; this }
@@ -1518,7 +1379,6 @@ private[sources] class ManifestWriteBuilder(dir: String, schema: StructType,
           expressions.SortDirection.ASCENDING))
     override def toBatch: BatchWrite =
       new ManifestBatchWrite(dir, schema, isTruncate, txnId, branch,
-        renameless = commitMode.exists(_.equalsIgnoreCase("renameless")),
         writerGeneration = writerGeneration)
   }
 }
@@ -1531,13 +1391,6 @@ private[sources] case class CommittedDelta(
     dataFile: Option[String], deleteFile: Option[String])
     extends WriterCommitMessage
 
-/** @param renameless publish through the S3-posture conditional-put
-  *   protocol ([[ManifestSink.casWriteStateRenameless]]): the version
-  *   object itself is the claim, there is NO pointer file, and readers
-  *   resolve by listing + footer validation. A table's committers must
-  *   all use ONE protocol — the two claim mechanisms (.claim markers vs
-  *   CREATE_NEW of the object) cannot arbitrate against each other.
-  */
 /** @param writerGeneration ZOMBIE-WRITER FENCING (the Delta/Iceberg
   *   application-version pattern): each committer declares its
   *   generation; the manifest remembers the highest ever committed, and
@@ -1549,8 +1402,7 @@ private[sources] case class CommittedDelta(
   */
 private[sources] class ManifestBatchWrite(dir: String, schema: StructType,
     truncate: Boolean, txnId: Option[String] = None,
-    branch: Option[String] = None, renameless: Boolean = false,
-    writerGeneration: Option[Long] = None)
+    branch: Option[String] = None, writerGeneration: Option[Long] = None)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -1569,96 +1421,52 @@ private[sources] class ManifestBatchWrite(dir: String, schema: StructType,
     val fresh = freshMsgs.map(_._1)
     val freshStats = freshMsgs.collect { case (f, Some(st), _) => f -> st }.toMap
     val freshCounts = freshMsgs.collect { case (f, _, Some(n)) => f -> n }.toMap
-    // Optimistic-concurrency loop (r8 verdict item 3): read prior state,
-    // build the next snapshot, CAS it in at expectedVersion+1; if a
-    // competing committer won the version slot, RE-READ (which rebases
-    // our appends onto the winner's snapshot — appends commute, and a
-    // truncate simply re-discards the winner's files while still carrying
-    // its txn set forward) and retry. Neither committer's snapshot can be
-    // silently lost: the loser never overwrites, it stacks.
-    var committed = false
-    while (!committed) {
-      // prior state is ALWAYS read — a truncate discards prior files and
-      // deletes but must still CARRY the txn set forward (ADVICE r6):
-      // otherwise a re-delivered overwrite with the same txnId republishes,
-      // and every overwrite wipes the history that catches later replays of
-      // old append txns.
-      // a branch commit stacks on the branch's own state (first branch
-      // commit forks from main); a main commit never sees branch state.
-      // CONSISTENCY (r11 bug fix, caught by the CAS spec under a tighter
-      // race): prior state must be read at the SAME version the CAS will
-      // expect — from the immutable v-file, never the manifest.json
-      // pointer. The pointer trails the v-file by one ATOMIC_MOVE; a
-      // loser that re-read in that window rebased onto the PRE-winner
-      // state while CASing at the winner's version+1, silently dropping
-      // the winner's files from the new latest snapshot.
-      // ADVICE r12 (medium #1): the table's ESTABLISHED protocol wins over
-      // the requested flag — a pointer-ful commit on a rename-less table
-      // publishes a footer-less object its readers skip as torn (and the
-      // reclaim path may overwrite), silently losing the commit; the
-      // mirror mix leaves a stale pointer shadowing the new version. The
-      // requested mode only decides for a VIRGIN table; re-checked every
-      // retry so a racing first committer's choice is honored.
-      val effRenameless =
-        ManifestSink.establishedCommitMode(dir).getOrElse(renameless)
-      val (expected, versioned) =
-        if (effRenameless)
-          // resolve exactly like a rename-less reader: highest
-          // footer-VALID version object (prior state and CAS expectation
-          // come from the same resolution, so a rebase can never stack
-          // onto a version the CAS doesn't expect)
-          ManifestSink.readStateRenameless(dir) match {
-            case Some((v, st)) => (v, Some(st))
-            case None => (0, None)
-          }
-        else {
-          val e = ManifestSink.latestVersion(dir)
-          (e,
-            if (e > 0) ManifestSink.readState(dir, Some(e))
-            else ManifestSink.readState(dir)) // pre-CAS legacy table
-        }
-      val prior = branch match {
-        case Some(b) => ManifestSink.readBranchState(dir, b).orElse(versioned)
-        case None => versioned
-      }
+    def dropFresh(): Unit =
+      fresh.foreach(f => Files.deleteIfExists(Paths.get(dir, "data", f)))
+    // the successor of `prior`, whose data files land at sequence `seq`;
+    // None for a replayed txn (its fresh files are deleted). Prior state
+    // is ALWAYS consulted — a truncate discards prior files and deletes
+    // but must still CARRY the txn set forward, or a re-delivered
+    // overwrite with the same txnId republishes and every overwrite wipes
+    // the history that catches later replays of old append txns.
+    def successor(seq: Int, prior: Option[ManifestSink.State])
+        : Option[ManifestSink.State] = {
       val priorTxns = prior.map(_.txns).getOrElse(Set.empty)
-      // fencing re-checks on EVERY retry: a competing commit may have
-      // raised the generation between our read and our CAS
+      // fencing runs on EVERY retry: a competing commit may have raised
+      // the generation between our read and our CAS
       val priorGen = prior.map(_.generation).getOrElse(0L)
       writerGeneration.filter(_ < priorGen).foreach { g =>
-        fresh.foreach(f => Files.deleteIfExists(Paths.get(dir, "data", f)))
+        dropFresh()
         throw new IllegalStateException(
           s"zombie writer fenced at $dir: commit generation $g is stale " +
             s"(table is at generation $priorGen) — a newer sync owns this table")
       }
-      if (txnId.exists(priorTxns.contains)) {
-        fresh.foreach(f => Files.deleteIfExists(Paths.get(dir, "data", f)))
-        committed = true
-      } else {
-        val seq = expected + 1
-        val keptFiles = if (truncate) Seq.empty else prior.map(_.files).getOrElse(Seq.empty)
-        val keptDels = if (truncate) Seq.empty else prior.map(_.deletes).getOrElse(Seq.empty)
-        val keptStats = if (truncate) Map.empty[String, (Long, Long)]
-          else prior.map(_.stats).getOrElse(Map.empty)
-        val keptCounts = if (truncate) Map.empty[String, Long]
-          else prior.map(_.counts).getOrElse(Map.empty)
-        val next = ManifestSink.State(schema,
-          keptFiles ++ fresh.map((_, seq)), keptDels, priorTxns ++ txnId,
-          keptStats ++ freshStats, keptCounts ++ freshCounts,
-          generation = math.max(priorGen, writerGeneration.getOrElse(0L)))
-        branch match {
-          case Some(b) =>
-            // branch staging is single-writer per branch (one streaming
-            // query owns its WAP branch) — pointer swap, no version CAS
-            ManifestSink.writeBranchState(dir, b, next); committed = true
-          case None =>
-            committed =
-              if (effRenameless)
-                ManifestSink.casWriteStateRenameless(dir, expected, next)
-              else ManifestSink.casWriteState(dir, expected, next)
-            if (!committed) Thread.sleep(1)
-        }
+      if (txnId.exists(priorTxns.contains)) { dropFresh(); None }
+      else {
+        val kept = if (truncate) None else prior
+        Some(ManifestSink.State(schema,
+          kept.map(_.files).getOrElse(Seq.empty) ++ fresh.map((_, seq)),
+          kept.map(_.deletes).getOrElse(Seq.empty), priorTxns ++ txnId,
+          kept.map(_.stats).getOrElse(Map.empty) ++ freshStats,
+          kept.map(_.counts).getOrElse(Map.empty) ++ freshCounts,
+          generation = math.max(priorGen, writerGeneration.getOrElse(0L))))
       }
+    }
+    branch match {
+      case Some(b) =>
+        // a branch commit stacks on the branch's own state (the first
+        // branch commit forks from main) and never mints a main version;
+        // staging is single-writer per branch (one streaming query owns
+        // its WAP branch) — pointer swap, no version CAS
+        val main = ManifestSink.readLatest(dir)
+        val seq = main.map(_._1).getOrElse(0) + 1
+        successor(seq, ManifestSink.readBranchState(dir, b).orElse(main.map(_._2)))
+          .foreach(ManifestSink.writeBranchState(dir, b, _))
+      case None =>
+        // read-rebase-retry: a lost CAS re-reads, which rebases our
+        // appends onto the winner's snapshot (appends commute; a truncate
+        // re-discards the winner's files while carrying its txn set)
+        ManifestSink.commit(dir)((v, prior) => successor(v + 1, prior))
     }
   }
 
@@ -1683,47 +1491,14 @@ private[sources] class ManifestDeltaBatchWrite(dir: String, schema: StructType)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val datas = messages.collect { case CommittedDelta(Some(f), _) => f }.toSeq
     val dels = messages.collect { case CommittedDelta(_, Some(f)) => f }.toSeq
-    // same optimistic read-rebase-retry as ManifestBatchWrite.commit —
-    // including its r11 consistency rule (applied here in r12): prior
-    // state is read AT the version the CAS will expect, from the
-    // immutable v-file, never the manifest.json pointer. The pointer
-    // trails the v-file by one ATOMIC_MOVE; a delta committer that
-    // re-read in that window would rebase onto the PRE-winner state
-    // while CASing at winner+1, silently dropping the winner's files.
-    // ADVICE r12 (medium #1): route through the table's ESTABLISHED
-    // commit protocol — a row-level DELETE/MERGE/UPDATE on a
-    // commitMode=renameless table used to publish a pointer-ful,
-    // footer-less version object that rename-less readers skip as torn
-    // (and casWriteStateRenameless may reclaim): the delete was silently
-    // lost. Re-checked every retry, defaulting pointer-ful on a virgin
-    // table (row-level SQL presupposes existing rows, so the virgin case
-    // is degenerate anyway).
-    var committed = false
-    while (!committed) {
-      val effRenameless =
-        ManifestSink.establishedCommitMode(dir).getOrElse(false)
-      val (expected, priorOpt) =
-        if (effRenameless) ManifestSink.readStateRenameless(dir) match {
-          case Some((v, st)) => (v, Some(st))
-          case None => (0, None)
-        }
-        else {
-          val e = ManifestSink.latestVersion(dir)
-          (e, if (e > 0) ManifestSink.readState(dir, Some(e))
-            else ManifestSink.readState(dir))
-        }
+    // same read-rebase-retry loop as ManifestBatchWrite.commit
+    ManifestSink.commit(dir) { (v, priorOpt) =>
       val prior = priorOpt.getOrElse(
         ManifestSink.State(schema, Seq.empty, Seq.empty, Set.empty))
-      val seq = expected + 1
-      val next = prior.copy(
-        files = prior.files ++ datas.map((_, seq)),
-        deletes = prior.deletes ++ dels.map((_, seq)))
-      committed =
-        if (effRenameless)
-          ManifestSink.casWriteStateRenameless(dir, expected, next)
-        else ManifestSink.casWriteState(dir, expected, next)
-      if (!committed) Thread.sleep(1)
-    }
+      Some(prior.copy(
+        files = prior.files ++ datas.map((_, v + 1)),
+        deletes = prior.deletes ++ dels.map((_, v + 1))))
+    }; ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -149,7 +149,7 @@ object MinHash {
     // half (m = 131), so one mask per TOKEN replaces the interpreted
     // per-CHARACTER HOF — value-identical (TextDedupSpec parity test)
     val tokHash = if (portable)
-      transform(graft.functions.PortableTokenHashes(df.sparkSession, col(textCol)),
+      transform(graft.functions.PortableTokenHashes(col(textCol)),
         h => h.bitwiseAND((1L << 31) - 1))
     else tokenCrcs(col(textCol))
     // fanout before the signature computation: token hashing + shingling

@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions._
   *    total volume is constant in T and the run measures orchestration);
   *  - THREE incremental rounds per table, each round committed by TWO
   *    RACING writers (the slice's key-parity halves written concurrently
-  *    from separate threads) through the RENAME-LESS conditional-put
-  *    protocol (`option("commitMode","renameless")`) — every version
-  *    slot is genuinely contended, every loser rebases;
+  *    from separate threads) through the conditional-put commit — every
+  *    version slot is genuinely contended, every loser rebases;
   *  - MID-STREAM SCHEMA EVOLUTION: after round 1 each table widens by a
   *    STRING column via its own CAS commit; rounds 2–3 write the new
   *    shape, round-1 files decode with trailing NULL;
@@ -27,9 +26,8 @@ import org.apache.spark.sql.functions._
   *    change-feed (scan_table_cdf_range surface): inserts must equal the
   *    slice size, deletes the F-key count, pre-evolution inserts must
   *    surface NULL in the added column, the plain read must equal
-  *    inserts − deletes, the version log must be exactly
-  *    6 appends + 1 evolution + 1 delete = 8 footer-valid objects, and
-  *    NO pointer file may exist anywhere;
+  *    inserts − deletes, and the version log must be exactly
+  *    6 appends + 1 evolution + 1 delete = 8 footer-valid objects;
   *  - CROSS-TABLE ATOMIC SYNC POINTS (r12 verdict #5): each round ends
   *    with one catalog-level `sync.v<N>.json` publish pinning every
   *    table's version; a CONCURRENT READER thread observes the replica
@@ -111,8 +109,7 @@ object ReplicaSoak {
     val reader = new Thread(() => {
       while (!readerStop) {
         val direct = (0 until t).map(i =>
-          graft.sources.ManifestSink.readStateRenameless(tdir(i))
-            .map(_._1).getOrElse(0))
+          graft.sources.ManifestSink.latestVersion(tdir(i)))
         if (direct.forall(_ >= 1)) {
           directObs.incrementAndGet()
           if (direct.distinct.size > 1) tornDirect.incrementAndGet()
@@ -123,8 +120,7 @@ object ReplicaSoak {
             val ok = pins.nonEmpty &&
               pins.values.toSeq.distinct.size == 1 &&
               pins.forall { case (dir, pv) =>
-                graft.sources.ManifestSink.readStateRenameless(dir)
-                  .exists(_._1 >= pv) &&
+                graft.sources.ManifestSink.latestVersion(dir) >= pv &&
                   graft.sources.ManifestSink.readState(dir, Some(pv)).isDefined
               }
             if (!ok) tornSync.incrementAndGet()
@@ -155,7 +151,7 @@ object ReplicaSoak {
               val df = withEvo.filter(expr(s"(k div $t) % 2 = $p"))
               new Thread(() =>
                 df.write.format(fmt).option("path", tdir(i))
-                  .option("commitMode", "renameless").mode("append").save())
+                  .mode("append").save())
             }
             halves.foreach(_.start()); halves.foreach(_.join())
             since(i) = w
@@ -168,19 +164,17 @@ object ReplicaSoak {
       // mid-stream evolution: widen every table by one CAS commit after
       // the first round, exactly like GraftCatalog's ALTER publishes
       if (round == 0) (0 until t).foreach { i =>
-        var done = false
-        while (!done) {
-          val (v, st) = graft.sources.ManifestSink.readStateRenameless(tdir(i))
-            .getOrElse(throw new IllegalStateException(s"no state for table_$i"))
-          done = graft.sources.ManifestSink.casWriteStateRenameless(tdir(i), v,
-            st.copy(schema = st.schema.add("st", org.apache.spark.sql.types.StringType)))
+        graft.sources.ManifestSink.commit(tdir(i)) { (_, prior) =>
+          val st = prior.getOrElse(
+            throw new IllegalStateException(s"no state for table_$i"))
+          Some(st.copy(schema = st.schema.add("st", org.apache.spark.sql.types.StringType)))
         }
       }
       // the round's cross-table ATOMIC sync point: one catalog-level
       // publish pinning every table's version — all-or-nothing for the
       // concurrent reader above
       val pins = (0 until t).map(i => tdir(i) ->
-        graft.sources.ManifestSink.readStateRenameless(tdir(i)).get._1).toMap
+        graft.sources.ManifestSink.latestVersion(tdir(i))).toMap
       graft.sources.ManifestSink.publishSyncPoint(syncDir, pins)
     }
     pool.shutdown()
@@ -194,17 +188,13 @@ object ReplicaSoak {
       Files.createDirectories(Paths.get(tdir(i), "data"))
       Files.write(Paths.get(tdir(i), "data", name),
         keys.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      var done = false
-      while (!done) {
-        val (v, st) = graft.sources.ManifestSink.readStateRenameless(tdir(i)).get
-        done = graft.sources.ManifestSink.casWriteStateRenameless(tdir(i), v,
-          st.copy(deletes = st.deletes :+ (name, v + 1)))
-      }
+      graft.sources.ManifestSink.commit(tdir(i))((v, prior) =>
+        prior.map(st => st.copy(deletes = st.deletes :+ (name, v + 1))))
     }
     // final sync point: the delete round becomes visible atomically too
     graft.sources.ManifestSink.publishSyncPoint(syncDir,
       (0 until t).map(i => tdir(i) ->
-        graft.sources.ManifestSink.readStateRenameless(tdir(i)).get._1).toMap)
+        graft.sources.ManifestSink.latestVersion(tdir(i))).toMap)
     readerStop = true
     reader.join(5000)
     val syncSec = (System.nanoTime() - t0) / 1e9
@@ -223,15 +213,14 @@ object ReplicaSoak {
       val insertNullSt = cdf.get("insert").map(_._2).getOrElse(0L)
       val deletes = cdf.get("delete").map(_._1).getOrElse(0L)
       val plain = spark.read.format(fmt).option("path", tdir(i)).load().count()
-      val (v, _) = graft.sources.ManifestSink.readStateRenameless(tdir(i)).get
-      val noPointer = !Files.exists(Paths.get(tdir(i), "manifest.json"))
+      val v = graft.sources.ManifestSink.latestVersion(tdir(i))
       val ok = inserts == total && deletes == nF && plain == total - nF &&
-        insertNullSt == r1 && v == 8 && noPointer
+        insertNullSt == r1 && v == 8
       if (!ok) bad += 1
       println(s"""{"soak_table":$i,"ok":$ok,"inserts":$inserts,"expect_inserts":$total,""" +
         s""""deletes":$deletes,"expect_deletes":$nF,"plain":$plain,""" +
         s""""pre_evolution_null_st":$insertNullSt,"expect_r1":$r1,""" +
-        s""""versions":$v,"pointerless":$noPointer}""")
+        s""""versions":$v}""")
     }
     // the final sync point must pin the final state (v=8 everywhere)
     val finalSync = graft.sources.ManifestSink.readSyncPoint(syncDir)

@@ -37,8 +37,7 @@ class CatalogSpec extends AnyFunSuite {
   test("GraftExtensions wiring applies cleanly; cosine_sim callable from SQL") {
     // the extensions class itself must install into a fresh extensions set
     new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    // and the same function registered on the live session answers SQL
-    functions.CosineSimilarity.register(spark)
+    // and the live session, built with the extensions, answers SQL
     Catalog.registerAll(spark, dir)
     val r = spark.sql(
       "SELECT cosine_sim(embedding, embedding) AS c FROM embeddings LIMIT 1")

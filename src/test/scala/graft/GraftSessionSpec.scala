@@ -127,4 +127,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(hits.subsetOf(allowed),
       s"session builder outside GraftSession (use GraftSession.build): ${hits -- allowed}")
   }
+
+  test("source guard: SQL function names are bound only by GraftExtensions") {
+    // native kernels are built as columns (Bridge.column); a per-call
+    // session registration re-registers the name on every use
+    for (needle <- Seq("createOrReplaceTempFunction", "udf.register")) {
+      val hits = SparkTestBase.filesContaining("src/main/scala", needle)
+      assert(hits.isEmpty,
+        s"`$needle` in main code (bind SQL names in GraftExtensions): $hits")
+    }
+  }
 }

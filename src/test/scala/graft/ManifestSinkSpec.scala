@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Commit-protocol properties of the DSv2 manifest sink that the oracle
   * row can't see: task abort removes the attempt's file, job abort
   * unpublishes task-committed files, overwrite truncates the manifest,
-  * and crashed-attempt orphans stay invisible while remaining on disk.
+  * crashed-attempt orphans stay invisible while remaining on disk, and
+  * every commit path publishes through the one footer-validated CAS.
   */
 class ManifestSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -438,13 +439,13 @@ class ManifestSinkSpec extends AnyFunSuite {
   }
 
   test("rename-less commit: concurrent committers, exactly-once visibility, zero renames (r10 verdict #6)") {
-    // The S3 posture drill: 4 committers race 10 read-modify-write
-    // appends each through casWriteStateRenameless — the conditional-put
-    // path where the version object itself is the claim and readers
-    // resolve state by listing + footer validation, no pointer file, no
+    // The object-store drill: 4 committers race 10 read-modify-write
+    // appends each through casWriteState — the conditional-put path
+    // where the version object itself is the claim and readers resolve
+    // state by listing + footer validation, no pointer file, no
     // ATOMIC_MOVE anywhere (by construction of the code path). A lost
     // CAS rebase-retries on the winner's snapshot, exactly like
-    // ManifestBatchWrite.commit's loop on the rename-ful path.
+    // ManifestSink.commit's loop.
     val dir = freshDir()
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(
@@ -457,12 +458,12 @@ class ManifestSinkSpec extends AnyFunSuite {
           val mine = s"data-c$c-i$i.txt"
           var done = false
           while (!done) {
-            val (v, st) = ManifestSink.readStateRenameless(dir)
+            val (v, st) = ManifestSink.readLatest(dir)
               .getOrElse((0, ManifestSink.State(schema, Seq.empty, Seq.empty, Set.empty)))
             // mid-race readers must never see a torn manifest: every
             // resolvable state parses and contains only completed appends
             st.files.foreach { case (f, _) => assert(f.startsWith("data-c")) }
-            done = ManifestSink.casWriteStateRenameless(
+            done = ManifestSink.casWriteState(
               dir, v, st.copy(files = st.files :+ (mine, v + 1)))
           }
           seen.add(mine)
@@ -470,7 +471,7 @@ class ManifestSinkSpec extends AnyFunSuite {
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
-    val (finalV, finalSt) = ManifestSink.readStateRenameless(dir).get
+    val (finalV, finalSt) = ManifestSink.readLatest(dir).get
     // exactly-once: every append visible exactly once, nothing lost to a
     // lost race, nothing doubled by a retry
     val files = finalSt.files.map(_._1)
@@ -483,7 +484,7 @@ class ManifestSinkSpec extends AnyFunSuite {
     // footer-less v(final+1) and confirm reads still resolve finalV
     Files.write(Paths.get(dir, s"manifest.v${finalV + 1}.json"),
       "torn".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val (vAfter, stAfter) = ManifestSink.readStateRenameless(dir).get
+    val (vAfter, stAfter) = ManifestSink.readLatest(dir).get
     assert(vAfter === finalV && stAfter.files.size === files.size)
   }
 
@@ -503,37 +504,35 @@ class ManifestSinkSpec extends AnyFunSuite {
     Files.write(Paths.get(dir, "manifest.v1.json"),
       "half-written garbage, no footer"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(ManifestSink.readStateRenameless(dir).isEmpty,
+    assert(ManifestSink.readLatest(dir).isEmpty,
       "a torn object must never resolve as state")
     val st = ManifestSink.State(schema, Seq(("data-a.txt", 1)), Seq.empty, Set.empty)
     // r13 (ADVICE low #3): a FRESH torn object is never reclaimed — it may
     // be a live writer paused mid-write, whose claim must not be stolen
-    assert(!ManifestSink.casWriteStateRenameless(dir, 0, st),
+    assert(!ManifestSink.casWriteState(dir, 0, st),
       "a claim inside the mtime grace window must not be reclaimed")
     // a corpse's mtime only ages: backdate past the grace window to
     // simulate the crash having happened long ago
     Files.setLastModifiedTime(Paths.get(dir, "manifest.v1.json"),
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - ManifestSink.reclaimGraceMs - 1000))
-    assert(ManifestSink.casWriteStateRenameless(dir, 0, st),
+    assert(ManifestSink.casWriteState(dir, 0, st),
       "commit over a stable aged torn claim must reclaim the slot, not livelock")
-    val (v, got) = ManifestSink.readStateRenameless(dir).get
+    val (v, got) = ManifestSink.readLatest(dir).get
     assert(v === 1 && got.files.map(_._1) === Seq("data-a.txt"))
     // but a VALID competing commit still wins: the same CAS at the same
     // version now loses cleanly (returns false) and changes nothing
     val st2 = ManifestSink.State(schema, Seq(("data-b.txt", 1)), Seq.empty, Set.empty)
-    assert(!ManifestSink.casWriteStateRenameless(dir, 0, st2))
-    assert(ManifestSink.readStateRenameless(dir).get._2
+    assert(!ManifestSink.casWriteState(dir, 0, st2))
+    assert(ManifestSink.readLatest(dir).get._2
       .files.map(_._1) === Seq("data-a.txt"))
   }
 
-  test("renameless commitMode: racing DataFrame writers, no pointer file, list-resolved reads (r12)") {
-    // the S3-posture protocol on the REAL DSv2 write path: 4 threads
-    // append disjoint key slices concurrently with
-    // option("commitMode","renameless"); every commit must land exactly
-    // once, the dir must contain NO manifest.json (pointer-less by
-    // construction), and a plain read resolves through the
-    // list-and-footer-validate fallback.
+  test("racing DataFrame writers land exactly once as footer-valid versions") {
+    // the protocol on the REAL DSv2 write path: 4 threads append
+    // disjoint key slices concurrently; every commit must land exactly
+    // once, the dir must contain no pointer file, and a plain read
+    // resolves through list-and-footer-validate.
     val dir = freshDir()
     val writers = 4
     val threads = (0 until writers).map { c =>
@@ -541,56 +540,56 @@ class ManifestSinkSpec extends AnyFunSuite {
         (0L until 20L).map(i => (c * 100L + i, i * 2.0, s"w$c"))
           .toDF("k", "v", "s")
           .write.format("graft.sources.ManifestSink").option("path", dir)
-          .option("commitMode", "renameless").mode("append").save()
+          .mode("append").save()
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(!Files.exists(Paths.get(dir, "manifest.json")),
-      "renameless commits must never write a pointer file")
+      "commits must never write a pointer file")
     val got = readVia(dir).collect().map(_.getLong(0)).sorted
     assert(got.length === writers * 20, "a racing commit was lost or doubled")
     assert(got.toSeq === (0 until writers)
       .flatMap(c => (0L until 20L).map(c * 100L + _)).sorted)
-    val (v, st) = ManifestSink.readStateRenameless(dir).get
+    val (v, st) = ManifestSink.readLatest(dir).get
     assert(v === writers, "one version object per commit, strictly sequential")
     // each commit lands its task files at its own sequence number — all
     // four sequences present means no rebase dropped a winner's files
     assert(st.files.map(_._2).toSet === (1 to writers).toSet)
   }
 
-  test("versioned read during the pointer lag window sees the moved v-file") {
-    // The lost-commit window caught live by the delta-vs-append race: a
-    // pointer-ful commit lands claim -> v-file (ATOMIC_MOVE) -> pointer.
-    // Between the move and the pointer write, latestVersion already
-    // reports the version (via the claim marker) but a versioned read
-    // that trusts only manifest.json returned None — and a racing
-    // read-modify-write committer fell back to EMPTY state, dropping the
-    // first commit's files when its CAS won. Simulate the window exactly.
+  test("an in-flight version object is invisible until its footer lands") {
+    // A commit's object streams in before its footer is written. Until
+    // the footer lands, versioned reads and latestVersion must not see
+    // it, and a racing read-modify-write committer must neither claim
+    // the slot nor rebase onto it — then, once the footer lands, the
+    // racer stacks on top of it.
     val dir = freshDir()
-    Files.createDirectories(Paths.get(dir))
-    Files.createFile(Paths.get(dir, ".claim.v1"))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        "k", org.apache.spark.sql.types.LongType)))
-    val st = ManifestSink.State(schema, Seq(("first.txt", 1)), Seq.empty, Set.empty)
-    val tmp = Paths.get(dir, ".manifest.window.tmp")
-    Files.write(tmp, ManifestSink.stateBody(st))
-    Files.move(tmp, Paths.get(dir, "manifest.v1.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // NO pointer written — we are inside the window
+    writeVia(dir, "append", 0, 3) // v1
+    val v1 = ManifestSink.readState(dir, Some(1)).get
+    val inFlight = v1.copy(files = v1.files :+ (("second.tsv", 2)))
+    val body = ManifestSink.stateBody(inFlight)
+    val p = Paths.get(dir, "manifest.v2.json")
+    Files.write(p, body) // content visible, footer not yet written
+    assert(ManifestSink.readState(dir, Some(2)).isEmpty,
+      "a footer-less object must not parse as state")
     assert(ManifestSink.latestVersion(dir) === 1)
-    val read = ManifestSink.readState(dir, Some(1))
-    assert(read.isDefined,
-      "a claim-marked v-file landed by ATOMIC_MOVE must be readable " +
-        "before the pointer catches up — None here recreates the lost-commit race")
-    assert(read.get.files.map(_._1) === Seq("first.txt"))
-    // and a rename-less table's torn object is STILL rejected: no claim
-    val dir2 = freshDir()
-    Files.createDirectories(Paths.get(dir2))
-    Files.write(Paths.get(dir2, "manifest.v1.json"),
-      ManifestSink.stateBody(st)) // in-place, footer-less, claim-less
-    assert(ManifestSink.readState(dir2, Some(1)).isEmpty,
-      "footer-less object on a pointer-less, claim-less table is in-flight")
+    assert(ManifestSink.readLatest(dir).get._2.files === v1.files)
+    // a live writer's fresh claim is never reclaimed by a racer
+    assert(!ManifestSink.casWriteState(dir, 1, v1),
+      "a racer must not take a slot whose writer is still in flight")
+    // the footer lands
+    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(body)
+      .map("%02x".format(_)).mkString
+    Files.write(p, s"\n#commit:$sha".getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(ManifestSink.latestVersion(dir) === 2)
+    assert(ManifestSink.readState(dir, Some(2)).get.files.map(_._1)
+      .contains("second.tsv"))
+    // a racer now rebases onto v2 and keeps its files
+    writeVia(dir, "append", 3, 5)
+    assert(ManifestSink.latestVersion(dir) === 3)
+    assert(ManifestSink.readState(dir).get.files.map(_._1)
+      .contains("second.tsv"), "the racer dropped the in-flight commit's files")
   }
 
   test("delta commits race append commits without losing either side (r12 consistency rule on the row-level path)") {
@@ -775,42 +774,9 @@ class ManifestSinkSpec extends AnyFunSuite {
     assert(ManifestSink.readSyncPoint(cat, Some(99)).isEmpty)
   }
 
-  test("row-level commits route through a renameless table's own protocol (r13, ADVICE medium #1)") {
-    // seed a rename-less table, then publish a delta commit through the
-    // row-level path. Before the fix the delta commit published via the
-    // pointer-ful CAS: a footer-LESS version object + a pointer file —
-    // rename-less readers skipped the commit as torn (the delete was
-    // silently lost) and the pointer violated the protocol's invariant.
-    val dir = freshDir()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        "k", org.apache.spark.sql.types.LongType)))
-    (0L until 4L).map(i => (i, i * 1.0, s"s$i")).toDF("k", "v", "s")
-      .write.format("graft.sources.ManifestSink").option("path", dir)
-      .option("commitMode", "renameless").mode("append").save()
-    val (v1, _) = ManifestSink.readStateRenameless(dir).get
-    ManifestTableAccess.deltaCommit(dir, schema,
-      dataFile = None, deleteFile = Some("del-x.tsv"))
-    assert(!Files.exists(Paths.get(dir, "manifest.json")),
-      "a delta commit on a renameless table must not create a pointer")
-    val (v2, st2) = ManifestSink.readStateRenameless(dir).get
-    assert(v2 === v1 + 1, "the delta commit must be footer-valid and visible")
-    assert(st2.deletes.map(_._1) === Seq("del-x.tsv"))
-    // and the mirror mix: a pointer-ful-flagged APPEND on the same table
-    // must also route renameless (established mode wins over the flag)
-    (10L until 12L).map(i => (i, i * 1.0, s"s$i")).toDF("k", "v", "s")
-      .write.format("graft.sources.ManifestSink").option("path", dir)
-      .mode("append").save()
-    assert(!Files.exists(Paths.get(dir, "manifest.json")),
-      "an un-flagged append on a renameless table must not create a pointer")
-    assert(ManifestSink.readStateRenameless(dir).get._1 === v2 + 1)
-  }
-
   test("versioned reads and latestVersion skip torn renameless objects (r13, ADVICE medium #2)") {
     val dir = freshDir()
-    (0L until 4L).map(i => (i, i * 1.0, s"s$i")).toDF("k", "v", "s")
-      .write.format("graft.sources.ManifestSink").option("path", dir)
-      .option("commitMode", "renameless").mode("append").save()
+    writeVia(dir, "append", 0, 4)
     assert(ManifestSink.latestVersion(dir) === 1)
     // plant a half-written v2 (no footer): a versionAsOf/CDF-range read of
     // v2 must see "not readable", and latestVersion must not count it —
@@ -820,15 +786,15 @@ class ManifestSinkSpec extends AnyFunSuite {
     assert(ManifestSink.readState(dir, Some(2)).isEmpty,
       "a torn version object must not parse as state")
     assert(ManifestSink.latestVersion(dir) === 1,
-      "latestVersion must not count footer-invalid objects on a pointer-less table")
+      "latestVersion must not count footer-invalid objects")
     // v1 itself still resolves (footer-valid)
     assert(ManifestSink.readState(dir, Some(1)).get.files.nonEmpty)
-    // a POINTER-FUL table's unfootered v-files still resolve (they land
-    // via ATOMIC_MOVE, so they are never torn)
-    val dir2 = freshDir()
-    writeVia(dir2, "append", 0, 4)
-    assert(ManifestSink.readState(dir2, Some(1)).get.files.nonEmpty)
-    assert(ManifestSink.latestVersion(dir2) === 1)
+    // a CDF range or stream offset stops at v1 as well
+    assert(ManifestTableAccess.cdfPlan(dir, 1, 1).nonEmpty)
+    intercept[Exception] {
+      spark.read.format("graft.sources.ManifestSink").option("path", dir)
+        .option("changeFeed", "true").option("endingVersion", "2").load().count()
+    }
   }
 
   test("CDF range fails loudly on delete-file removals too (r13, ADVICE low #4)") {
@@ -851,5 +817,94 @@ class ManifestSinkSpec extends AnyFunSuite {
     assert(err.getMessage.contains("delete file(s)"))
     // a range NOT spanning the drop still plans fine
     assert(ManifestTableAccess.cdfPlan(dir, 1, 2).nonEmpty)
+  }
+
+  test("every commit path publishes footer-valid versions and no pointer") {
+    val wh = util.tempDir("graft_paths_spec_")
+    spark.conf.set("spark.sql.catalog.graft_paths_cat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_paths_cat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_paths_cat.ns")
+    val t = "graft_paths_cat.ns.t"
+    val dir = s"$wh/ns/t"
+    var commits = 0
+    def committed(what: String): Unit = {
+      commits += 1
+      assert(ManifestSink.latestVersion(dir) === commits, s"after $what")
+    }
+    spark.sql(s"CREATE TABLE $t (k BIGINT NOT NULL, s STRING, v DOUBLE)")
+    committed("CREATE")
+    Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("k", "s", "v")
+      .createOrReplaceTempView("paths_src")
+    spark.sql(s"""MERGE INTO $t t USING paths_src s ON t.k = s.k
+                 |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.k, s.s, s.v)"""
+      .stripMargin)
+    committed("MERGE")
+    spark.sql(s"DELETE FROM $t WHERE k = 2")
+    committed("DELETE")
+    spark.sql(s"ALTER TABLE $t ADD COLUMN x STRING")
+    committed("ALTER TABLE ADD COLUMN")
+    def write(rows: Seq[Long], mode: String, opts: (String, String)*): Unit =
+      opts.foldLeft(rows.map(k => (k, s"s$k", k * 1.0, s"x$k")).toDF("k", "s", "v", "x")
+        .write.format("graft.sources.ManifestSink").option("path", dir)) {
+        case (w, (key, value)) => w.option(key, value)
+      }.mode(mode).save()
+    write(Seq(10L, 11L), "append")
+    committed("DataFrame append")
+    write(Seq(20L, 21L, 22L), "overwrite")
+    committed("DataFrame overwrite")
+    write(Seq(30L), "append", "txnId" -> "paths-1")
+    committed("txnId append")
+    write(Seq(31L), "append", "txnId" -> "paths-1") // replay: no commit
+    assert(ManifestSink.latestVersion(dir) === commits, "a txnId replay committed")
+    write(Seq(40L), "append", "branch" -> "audit")
+    assert(ManifestSink.latestVersion(dir) === commits, "a branch write committed")
+    ManifestSink.publishBranch(dir, "audit")
+    committed("publishBranch")
+    assert(ManifestSink.restoreVersion(dir, 6) === commits + 1)
+    committed("restoreVersion")
+    assert(spark.sql(s"SELECT k FROM $t").collect().map(_.getLong(0)).sorted
+      .toSeq === Seq(20L, 21L, 22L))
+    val clone = freshDir()
+    ManifestSink.shallowClone(dir, clone)
+    assert(ManifestSink.latestVersion(clone) === 1)
+    for ((d, n) <- Seq(dir -> commits, clone -> 1)) {
+      val names = Files.list(Paths.get(d)).iterator().asScala
+        .map(_.getFileName.toString).toSeq
+      assert(!names.contains("manifest.json"), s"pointer file in $d")
+      assert(!names.exists(_.startsWith(".claim.")), s"claim marker in $d")
+      val versions = names.collect {
+        case f if f.matches("manifest\\.v\\d+\\.json") =>
+          f.stripPrefix("manifest.v").stripSuffix(".json").toInt
+      }.sorted
+      assert(versions === (1 to n), s"version objects of $d")
+      versions.foreach { v =>
+        assert(ManifestSink.readState(d, Some(v)).isDefined, s"v$v of $d")
+        val text = new String(Files.readAllBytes(Paths.get(d, s"manifest.v$v.json")),
+          java.nio.charset.StandardCharsets.UTF_8)
+        assert(text.split("\n").last.startsWith("#commit:"), s"v$v of $d has no footer")
+      }
+    }
+  }
+
+  test("SQL VERSION AS OF an in-flight version is NoSuchTable") {
+    val wh = util.tempDir("graft_tt_torn_spec_")
+    spark.conf.set("spark.sql.catalog.graft_ttt_cat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_ttt_cat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_ttt_cat.ns")
+    spark.sql("CREATE TABLE graft_ttt_cat.ns.t (k BIGINT)") // v1
+    val st = ManifestSink.readState(s"$wh/ns/t").get
+    Files.write(Paths.get(wh, "ns", "t", "manifest.v2.json"), ManifestSink.stateBody(st))
+    assertThrows[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT * FROM graft_ttt_cat.ns.t VERSION AS OF 2").count()
+    }
+    assert(spark.sql("SELECT * FROM graft_ttt_cat.ns.t VERSION AS OF 1").count() === 0)
+  }
+
+  test("source guard: manifest tables have one commit protocol") {
+    // a pointer file or a commit-mode switch reopens the two-protocol seam
+    for (needle <- Seq("commitMode", "\"manifest.json\"")) {
+      val hits = SparkTestBase.filesContaining("src/main/scala", needle)
+      assert(hits.isEmpty, s"`$needle` in main code: $hits")
+    }
   }
 }

@@ -54,7 +54,7 @@ class OperatorSpec extends AnyFunSuite {
         lit(0.0), (acc, v) => acc + v)
     val hof = hofDot("a", "b") / (sqrt(hofDot("a", "a")) * sqrt(hofDot("b", "b")))
     val rows = pairs.select(
-      functions.CosineSimilarity(spark, col("a"), col("b")).as("native"),
+      functions.CosineSimilarity(col("a"), col("b")).as("native"),
       hof.as("hof")).collect()
     rows.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))
   }

@@ -40,7 +40,7 @@ class Round11Spec extends AnyFunSuite {
       df.select(
           posexplode(arrays_zip(
             split(col("text"), " "),
-            transform(graft.functions.PortableTokenHashes(spark, col("text")),
+            transform(graft.functions.PortableTokenHashes(col("text")),
               h => h.bitwiseAND((1L << 31) - 1)))).as(Seq("pos", "z")))
         .select(col("pos"), col("z.0").as("tok"), col("z.1").as("th"))
         .withColumn("cut", when(col("th") % 16 === 0, 1L).otherwise(0L))

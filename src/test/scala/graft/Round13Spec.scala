@@ -59,27 +59,28 @@ class Round13Spec extends AnyFunSuite {
     assert(spark.read.format(fmt).option("path", out).load().count() === v2)
   }
 
-  test("restoreVersion routes through the rename-less protocol when established") {
+  test("restoreVersion carries the current txn set and writer generation forward") {
     val fmt = "graft.sources.ManifestSink"
-    val out = graft.util.tempDir("graft_restore_rl_")
+    val out = graft.util.tempDir("graft_restore_txn_")
     val o = Tables(spark, dir, "orders").select(col("o_orderkey"))
-    o.filter(col("o_orderkey") % 2 === 0)
-      .write.format(fmt).option("path", out)
-      .option("commitMode", "renameless").mode("append").save()
-    o.filter(col("o_orderkey") % 2 === 1)
-      .write.format(fmt).option("path", out)
-      .option("commitMode", "renameless").mode("append").save()
+    def append(mod: Int, txn: String, gen: Long): Unit =
+      o.filter(col("o_orderkey") % 2 === mod)
+        .write.format(fmt).option("path", out).option("txnId", txn)
+        .option("writerGeneration", gen.toString).mode("append").save()
+    append(0, "t1", 1)
+    append(1, "t2", 2)
     val v = graft.sources.ManifestSink.restoreVersion(out, 1)
     assert(v === 3)
-    // the restore must be footer-valid (visible to rename-less readers)
-    // and must NOT have created a pointer on a pointer-less table
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(out, "manifest.json")),
-      "restore published a pointer on a rename-less table")
-    val cur = spark.read.format(fmt).option("path", out).load().count()
-    val v1 = spark.read.format(fmt).option("path", out)
-      .option("versionAsOf", "1").load().count()
-    assert(cur === v1)
+    val st = graft.sources.ManifestSink.readState(out, Some(3)).get
+    // v1's files, but the CURRENT txns and generation: a replay of t2
+    // stays a replay after the rollback, and generation 1 stays fenced
+    assert(st.files === graft.sources.ManifestSink.readState(out, Some(1)).get.files)
+    assert(st.txns === Set("t1", "t2"))
+    assert(st.generation === 2L)
+    append(1, "t2", 2)
+    assert(graft.sources.ManifestSink.latestVersion(out) === 3, "a replayed txn committed")
+    intercept[Throwable] { append(1, "t3", 1) }
+    assert(graft.sources.ManifestSink.latestVersion(out) === 3, "a fenced writer committed")
   }
 
   test("stat_g_test agrees in direction with stat_chi_square's contingency logic") {

@@ -91,7 +91,7 @@ class TextDedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val native = docs
       .select(col("doc_id"), SimHash.tokenHashes(col("text")).as("hs"))
-      .select(col("doc_id"), graft.functions.SimHashFingerprint(spark, col("hs")).as("fp"))
+      .select(col("doc_id"), graft.functions.SimHashFingerprint(col("hs")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(agg === hof)
     assert(native === hof)
@@ -109,7 +109,7 @@ class TextDedupSpec extends AnyFunSuite {
     val native = fpMap(withNull
       .select(col("doc_id"), SimHash.tokenHashes(col("text")).as("hs"))
       .select(col("doc_id"),
-        graft.functions.SimHashFingerprint(spark, col("hs")).as("fp")).collect())
+        graft.functions.SimHashFingerprint(col("hs")).as("fp")).collect())
     assert(hof(2L).isEmpty && agg(2L).isEmpty && native(2L).isEmpty,
       "null text must yield NULL fingerprint in all three forms")
     assert(agg === hof)
@@ -120,7 +120,7 @@ class TextDedupSpec extends AnyFunSuite {
     val df = Seq(Tuple1(arr)).toDF("hs")
     val h = df.select(SimHash.simhash(col("hs")).as("fp")).head.getLong(0)
     val n = df.select(
-      graft.functions.SimHashFingerprint(spark, col("hs")).as("fp")).head.getLong(0)
+      graft.functions.SimHashFingerprint(col("hs")).as("fp")).head.getLong(0)
     assert(h === n)
     assert(h === 0x0f0fL, "two identical votes must win with the null skipped")
   }
@@ -134,7 +134,7 @@ class TextDedupSpec extends AnyFunSuite {
       Literal.create(hashes.map(_.longValue), ArrayType(LongType)))
     val interp = e.eval(null).asInstanceOf[Long]
     val viaDf = Seq(Tuple1(hashes.map(_.longValue).toSeq)).toDF("hs")
-      .select(graft.functions.SimHashFingerprint(spark, col("hs")).as("fp"))
+      .select(graft.functions.SimHashFingerprint(col("hs")).as("fp"))
       .head.getLong(0)
     assert(interp === viaDf)
     // majority of 3 with two 0x0f0f0f0f votes: low nibbles win, -1 alone loses
@@ -188,7 +188,7 @@ class TextDedupSpec extends AnyFunSuite {
     val hof = df.select(SimHash.portableTokenHashes(col("text")).as("hs"))
       .collect().map(_.getSeq[Long](0))
     val native = df.select(
-        graft.functions.PortableTokenHashes(spark, col("text")).as("hs"))
+        graft.functions.PortableTokenHashes(col("text")).as("hs"))
       .collect().map(_.getSeq[Long](0))
     assert(native.toSeq === hof.toSeq)
   }
@@ -199,7 +199,7 @@ class TextDedupSpec extends AnyFunSuite {
     val hof = df.select(MinHash.portableTokenHashes(col("text")).as("hs"))
       .collect().map(_.getSeq[Long](0))
     val masked = df.select(
-        transform(graft.functions.PortableTokenHashes(spark, col("text")),
+        transform(graft.functions.PortableTokenHashes(col("text")),
           h => h.bitwiseAND((1L << 31) - 1)).as("hs"))
       .collect().map(_.getSeq[Long](0))
     assert(masked.toSeq === hof.toSeq)
@@ -211,7 +211,7 @@ class TextDedupSpec extends AnyFunSuite {
     val interp = e.eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
     val viaDf = Seq(Tuple1("ab cd ")).toDF("text")
-      .select(graft.functions.PortableTokenHashes(spark, col("text")))
+      .select(graft.functions.PortableTokenHashes(col("text")))
       .head.getSeq[Long](0)
     assert(interp.toSeq === viaDf.toSeq)
   }
