@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
@@ -26,9 +27,16 @@ import org.apache.spark.sql.catalyst.expressions.aggregate
   * small-build-side as-of, where the union+window rewrite would shuffle
   * the (huge) probe side and a broadcast + binary-search probe shuffles
   * nothing — the case where a custom operator genuinely beats composition.
+  *
+  * Every engine session passes through here, including one built by a
+  * driver that only sets `spark.sql.extensions`, so this is also where the
+  * engine's `file:` filesystem ([[LocalFs]]) is installed on the
+  * SparkContext's Hadoop conf: the builder runs it after the SparkContext
+  * starts and before the session first opens a `file:` filesystem.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    LocalFs.install(SparkContext.getOrCreate().hadoopConfiguration)
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[functions.CosineSimilarity].getName, "cosine_sim"),

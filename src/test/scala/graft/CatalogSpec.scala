@@ -35,10 +35,11 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions wiring applies cleanly; cosine_sim callable from SQL") {
-    // the extensions class itself must install into a fresh extensions set
-    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    // and the live session, built with the extensions, answers SQL
+    // the live session, built with the extensions, answers SQL
     Catalog.registerAll(spark, dir)
+    // the extensions class itself must install into a fresh extensions set
+    // (its filesystem install reads the SparkContext the session started)
+    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
     val r = spark.sql(
       "SELECT cosine_sim(embedding, embedding) AS c FROM embeddings LIMIT 1")
       .head.getDouble(0)

@@ -698,4 +698,23 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("ExistingRDD"), plan.take(800))
     assert(!plan.contains("Join"), plan.take(800))
   }
+
+  test("source ratchet: unpartitioned window specs do not grow in any file") {
+    // `Window.orderBy(` with no partitionBy moves every row into one
+    // partition (Spark warns "No Partition Defined for Window operation").
+    // The counts below are the sites to rewrite (ROADMAP "Carried"); lower
+    // a count when a site is rewritten, never raise one.
+    val allowed = Map(
+      "src/main/scala/graft/ops/Aggregates.scala" -> 13,
+      "src/main/scala/graft/ops/Cdc.scala" -> 1,
+      "src/main/scala/graft/ops/Eval.scala" -> 4,
+      "src/main/scala/graft/ops/Quality.scala" -> 1,
+      "src/main/scala/graft/ops/SimOps.scala" -> 1,
+      "src/main/scala/graft/ops/Sources.scala" -> 1,
+      "src/main/scala/graft/ops/TextOps.scala" -> 11,
+      "src/main/scala/graft/ops/Windows.scala" -> 25)
+    val grown = SparkTestBase.occurrences("src/main/scala", "Window.orderBy(")
+      .filter { case (f, n) => n > allowed.getOrElse(f, 0) }
+    assert(grown.isEmpty, s"new unpartitioned window specs (partition them, or use a two-phase form): $grown")
+  }
 }

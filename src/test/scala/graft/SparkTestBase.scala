@@ -20,13 +20,23 @@ object SparkTestBase {
   /** Scala sources under `sub` (relative to the repo root) containing
     * `needle`, for the source guards.
     */
-  def filesContaining(sub: String, needle: String): Set[String] = {
+  def filesContaining(sub: String, needle: String): Set[String] =
+    occurrences(sub, needle).keySet
+
+  /** How many times `needle` occurs in each Scala source under `sub` that
+    * contains it, for the source ratchets.
+    */
+  def occurrences(sub: String, needle: String): Map[String, Int] = {
     val walk = Files.walk(repoRoot.resolve(sub))
     try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains(needle))
-      .map(p => repoRoot.relativize(p).toString)
-      .toSet
+      .map(p => repoRoot.relativize(p).toString -> count(Files.readString(p), needle))
+      .filter(_._2 > 0)
+      .toMap
     finally walk.close()
   }
+
+  private def count(text: String, needle: String): Int =
+    Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + needle.length))
+      .takeWhile(_ >= 0).size
 }
