@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** SparkSessionExtensions entry point (SURVEY.md §2.12): installs the
   * engine's native functions into any session at build time —
@@ -33,10 +34,16 @@ import org.apache.spark.sql.catalyst.expressions.aggregate
   * engine's `file:` filesystem ([[LocalFs]]) is installed on the
   * SparkContext's Hadoop conf: the builder runs it after the SparkContext
   * starts and before the session first opens a `file:` filesystem.
+  *
+  * It is also where every engine session is made to share the executors'
+  * default session state ([[GraftExtensions.shareSessionState]]), so code
+  * generated for one streaming query run serves the next.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    LocalFs.install(SparkContext.getOrCreate().hadoopConfiguration)
+    val sc = SparkContext.getOrCreate()
+    LocalFs.install(sc.hadoopConfiguration)
+    GraftExtensions.shareSessionState(Bridge.sparkConf(sc))
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[functions.CosineSimilarity].getName, "cosine_sim"),
@@ -76,4 +83,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectParser((session, delegate) =>
       new plans.GraftSqlParser(session, delegate))
   }
+}
+
+object GraftExtensions {
+
+  /** Turn off Spark's per-session artifact isolation in `conf` unless it
+    * is set explicitly. With isolation on (Spark's default), every session
+    * sends its own UUID with its tasks, and the executor builds an isolated
+    * session state with a fresh classloader for each one. Every streaming
+    * query run executes on a clone of its session, so each run's tasks
+    * would load under a new classloader and miss the generated-code cache,
+    * which is keyed by classloader, and compile the same classes again.
+    *
+    * The engine adds no jars, files or other artifacts to any session, so
+    * there is nothing to isolate. A deployment that does add per-session
+    * artifacts (Spark Connect, for example) sets the key itself, and its
+    * value wins. Sessions read the key when they are built, from the
+    * SparkContext's conf as it stands then, so this runs on the running
+    * SparkContext's own conf before the engine session is built.
+    */
+  def shareSessionState(conf: SparkConf): Unit =
+    conf.setIfMissing("spark.sql.artifact.isolation.enabled", "false")
 }

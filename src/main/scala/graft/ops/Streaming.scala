@@ -396,23 +396,22 @@ object Streaming {
     * with; here it trims fixed per-micro-batch overhead).
     */
   private def runToMemory(s: SparkSession, df: DataFrame, name: String, mode: String): DataFrame = {
-    // r17: no width pin here — every Streaming def runs inside
+    // No width is set here: every Streaming def runs inside
     // [[withStreamStatePartitions]], whose input-size-derived width (floor
-    // 4) IS the state-store count. The previous hard `set(..., "4")`
-    // overrode that scale-adaptive width with a local-tuned constant:
-    // identical on the fixture (the 17 MB dir floors at 4), wrong at any
-    // real input size.
+    // 4) is the state-store count. A constant set here would override that
+    // width with one tuned to the fixture (whose 17 MB dir floors at 4 all
+    // the same) and wrong at any real input size.
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     s.table(name)
   }
 
-  /** The [[stream_dedup_rocksdb]] pipeline to a COUNT-ONLY (noop) sink
-    * (r12 verdict #6): the registry row drains to a memory sink so its
-    * oracle can read the rows back, but at a ×100 stress factor that
-    * sink's driver-resident table dominates wall-clock and the SCALE.md
-    * ratio certified the harness, not the operator. This variant runs
+  /** The [[stream_dedup_rocksdb]] pipeline to a COUNT-ONLY (noop) sink.
+    * The registry row drains to a memory sink so its oracle can read the
+    * rows back, but at a ×100 stress factor that sink's driver-resident
+    * table dominates wall-clock, so a SCALE.md ratio taken on it would
+    * measure the harness, not the operator. This variant runs
     * the IDENTICAL source → watermark → dropDuplicates chain on the
     * RocksDB provider into `format("noop")` — rows are fully computed
     * and counted by the sink, nothing is retained — so its wall ratio is
@@ -443,7 +442,8 @@ object Streaming {
     */
   private def runToMemoryDrain(s: SparkSession, df: DataFrame, name: String,
       mode: String, expectedInputRows: Long): DataFrame = {
-    // width owned by [[withStreamStatePartitions]] — see runToMemory
+    // No width is set here either: [[withStreamStatePartitions]] owns it
+    // (see runToMemory).
     // 1 s pacing keeps the no-data batches (which the stateful operator
     // requests forever) from flooding the bounded recentProgress buffer
     // before the poll below has summed the data batches' row counts.
@@ -530,24 +530,24 @@ object Streaming {
     // execution, and lazy work in the returned DataFrame executes
     // after restore (fine: every wrapped row's RESULT is
     // partitioning-agnostic; the width only shapes the stream's state
-    // stores, which fn runs to completion). (ADVICE r16)
+    // stores, which fn runs to completion).
     dirBytes(s, dir) match {
       case Some(bytes) =>
         val p = math.max(4L, bytes / (32L << 20))
         withConfs(s, Seq("spark.sql.shuffle.partitions" -> p.toString))(fn(s, dir))
       case None =>
         // probe failed: keep the SESSION default rather than flooring at
-        // 4 — on any storage the probe can't see, a floor-4 width is the
-        // exact scale-killer this wrapper exists to prevent (VERDICT r16
-        // what's-wrong #3)
+        // 4 — on any storage the probe can't see, a floor-4 width would
+        // size a large input's state to 4 stores, the scale-killer this
+        // wrapper exists to prevent
         fn(s, dir)
     }
   }
 
   /** Recursive byte total of `dir` through the Hadoop filesystem layer —
     * storage-agnostic (local paths, HDFS, object stores all answer
-    * `getContentSummary`), unlike the r16 `java.nio.file.Files.list`
-    * probe, which was non-recursive and local-only. `None` (NOT zero) on
+    * `getContentSummary`); a `java.nio.file.Files.list` probe would be
+    * non-recursive and local-only and undercount. `None` (NOT zero) on
     * any failure, so callers fall back instead of sizing to the floor.
     */
   private[ops] def dirBytes(s: SparkSession, dir: String): Option[Long] =

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[GraftSession.withConfs]] leaves the session's explicit conf exactly as
   * it found it; no registry row that scopes a conf leaks it into the next
-  * row; and no new hand-rolled session builder or conf restore appears
-  * outside [[GraftSession]].
+  * row; no new hand-rolled session builder or conf restore appears
+  * outside [[GraftSession]]; and engine sessions share the executors'
+  * session state unless a deployment says otherwise.
   */
 class GraftSessionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -136,5 +138,23 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(hits.isEmpty,
         s"`$needle` in main code (bind SQL names in GraftExtensions): $hits")
     }
+  }
+
+  test("engine sessions and their clones run without artifact isolation; an explicit value wins") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    assert(spark.conf.get(key) === "false")
+    assert(spark.newSession().conf.get(key) === "false")
+    val unset = new SparkConf(false)
+    GraftExtensions.shareSessionState(unset)
+    assert(unset.get(key) === "false")
+    val explicit = new SparkConf(false).set(key, "true")
+    GraftExtensions.shareSessionState(explicit)
+    assert(explicit.get(key) === "true")
+  }
+
+  test("source guard: artifact isolation is configured only by GraftExtensions") {
+    val hits = SparkTestBase.filesContaining("src/main/scala", "spark.sql.artifact.isolation")
+    assert(hits === Set("src/main/scala/graft/GraftExtensions.scala"),
+      s"artifact isolation set outside GraftExtensions.shareSessionState: $hits")
   }
 }

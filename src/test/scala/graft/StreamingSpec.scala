@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -145,6 +146,20 @@ class StreamingSpec extends AnyFunSuite {
       val key = f"${h.getYear}%04d-${h.getMonthValue}%02d-${h.getDayOfMonth}%02d ${h.getHour}%02d"
       assert(batchHourly(key) === r.getLong(2), s"hourly total mismatch at $key")
     }
+  }
+
+  test("stream_chained_windows: a warm run reuses the generated code of the run before") {
+    // each streaming query run executes on a clone of the session; with
+    // per-session artifact isolation every clone's tasks compile the same
+    // classes again under a fresh executor classloader (25 a run here)
+    def run(): Unit =
+      SparkEntry.queries("stream_chained_windows")(spark, SparkTestBase.sfDir).collect()
+    run()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    run()
+    val warm = compiles.getCount - before
+    assert(warm <= 12, s"$warm classes compiled on a warm run")
   }
 
   test("stream_changelog_checkpoint: per-batch .changelog files land, RocksDB metrics reported, results provider-independent") {
