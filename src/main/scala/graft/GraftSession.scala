@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  private val shufflePartitions = "spark.sql.shuffle.partitions"
+
   /** A local session on `cores` threads with the engine's settings:
-    *  - `shuffle.partitions` = `cores`;
+    *  - `shuffle.partitions` = `cores` (the default width; work that knows
+    *    its input size scopes its own with [[withWidth]]);
     *  - the graft extensions (native functions, planner rules);
     *  - UTC session time zone;
     *  - `nanosAsLong`, so legacy TIMESTAMP(NANOS) `events.ts` reads as a raw
@@ -23,7 +26,7 @@ object GraftSession {
   def build(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config(shufflePartitions, cores.toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -56,6 +59,24 @@ object GraftSession {
       }
     }
   }
+
+  /** The shuffle width for work over `bytes` of input or state: one
+    * partition per 32 MB, at least one. A stateful streaming operator
+    * keeps one state store per partition and opens and commits every
+    * store on every micro-batch, and an iterative loop pays every
+    * partition's task on every round, so width beyond the data is fixed
+    * cost. The rule has no floor above one: an input of a few MB runs
+    * one store per operator, a 100 TB input sizes to millions of
+    * partitions. The rule reads bytes, never the core count.
+    */
+  def width(bytes: Long): Long = math.max(1L, bytes / (32L << 20))
+
+  /** Run `body` with `spark.sql.shuffle.partitions` scoped to
+    * [[width]]`(bytes)`, restored as [[withConfs]] restores. The only
+    * writer of the width besides [[build]].
+    */
+  def withWidth[T](s: SparkSession, bytes: Long)(body: => T): T =
+    withConfs(s, Seq(shufflePartitions -> width(bytes).toString))(body)
 
   /** Mount the graft catalog as `graft_cat` on the JVM's one warehouse
     * (Spark caches a catalog instance per session at first use, so every

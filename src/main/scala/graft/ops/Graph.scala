@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Staged, Tables}
-import graft.GraftSession.withConfs
+import graft.GraftSession.withWidth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,31 +37,26 @@ object Graph {
       .localCheckpoint(true) // computed once, reused every round
     var labels = nodes.select(col("doc_id"), col("doc_id").as("comp"))
       .localCheckpoint(true)
-    // r17 (guide §2.2 fewer-larger partitions; the streaming wrapper's
-    // size-derived discipline): every round runs ~5 exchanges over
-    // O(nodes + edges) two-long rows — at the session width that is
-    // hundreds of near-empty tasks per round, pure fixed cost (probed
-    // 3.6 s warm for the pipeline_training_mix loop at width 32). Size
-    // the loop's width from the measured state instead: ~32 B/row, one
-    // partition per 32 MB, floor 4 — the fixture sizes to 4, a trillion-
-    // edge graph sizes to thousands. Both inputs are eager checkpoints,
-    // so the two counts are block-metadata jobs, and the conf is
-    // restored before the (checkpointed) result is returned.
+    // Every round runs ~5 exchanges over O(nodes + edges) two-long rows,
+    // so each partition beyond the state volume is a near-empty task per
+    // exchange per round. The loop's width follows the measured state
+    // (~32 B/row) through the session's one width rule
+    // (GraftSession.width), never the core count. Both inputs are eager
+    // checkpoints, so the two counts are block-metadata jobs, and the conf
+    // is restored before the (checkpointed) result is returned.
     val sess = nodes.sparkSession
     val nNodes = labels.count()
-    val stateRows = nNodes + e.count()
-    val width = math.max(4L, (stateRows * 32L) / (32L << 20))
-    // r17 (guide §3.1, the SCC pattern): checkpointed RDDs carry no stats,
-    // so the per-round joins planned as SortMergeJoin — 2 exchanges each.
-    // The label table's size IS known (nNodes × 2 longs): when it provably
-    // fits a broadcast, hint both per-round joins so each round is ONE
-    // groupBy exchange + broadcast builds from already-materialized
-    // checkpoint blocks (the step1 subtree under both sides of the
-    // pointer-jump join still shares one exchange via ReuseExchange).
-    // At a 100 TB node count the condition is false and the shuffled
-    // joins return — size-derived, never core-count-derived.
+    val stateBytes = (nNodes + e.count()) * 32L
+    // Checkpointed RDDs carry no stats, so without a hint the per-round
+    // joins plan as SortMergeJoin, 2 exchanges each. The label table's
+    // size is known (nNodes × 2 longs): when it fits a broadcast, both
+    // per-round joins are hinted, so each round is one groupBy exchange
+    // plus broadcast builds from materialized checkpoint blocks (the
+    // step1 subtree under both sides of the pointer-jump join shares one
+    // exchange via ReuseExchange). Past the bound the shuffled joins
+    // return; the choice reads the size, never the core count.
     val bcastLabels = nNodes * 32L < (64L << 20)
-    withConfs(sess, Seq("spark.sql.shuffle.partitions" -> width.toString)) {
+    withWidth(sess, stateBytes) {
       var prevSum: java.math.BigDecimal = null
       var iter = 0
       var converged = false

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Staged, util}
-import graft.GraftSession.{mountCatalog, withConfs}
+import graft.GraftSession.{mountCatalog, withConfs, withWidth}
 import graft.cdc.Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -259,13 +259,6 @@ object Streaming {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  /** Four state-store partitions, pinned by the stream rows that fix
-    * their width (state readers, restart, changelog, observed metrics).
-    * Nested inside [[withStreamStatePartitions]], it overrides the derived
-    * width for that row's stream only.
-    */
-  private[graft] val fourStatePartitions = Seq("spark.sql.shuffle.partitions" -> "4")
-
   /** Path to an events parquet file in the LEGACY wire layout the file
     * stream sources declare (`rawSchema`: ts as raw nanosecond long). For
     * legacy testdata this is the driver's file itself; for the µs-layout
@@ -390,17 +383,14 @@ object Streaming {
 
   /** Run a streaming DataFrame to completion into a memory sink, return the
     * resulting table. Stateful operators materialize one state-store
-    * instance per shuffle partition — size that to the stream's key
-    * cardinality, not the batch session default (at cluster scale this is
-    * the `spark.sql.shuffle.partitions` the streaming job is launched
-    * with; here it trims fixed per-micro-batch overhead).
+    * instance per shuffle partition, so the width the query starts under
+    * is its state-store count.
     */
   private def runToMemory(s: SparkSession, df: DataFrame, name: String, mode: String): DataFrame = {
     // No width is set here: every Streaming def runs inside
-    // [[withStreamStatePartitions]], whose input-size-derived width (floor
-    // 4) is the state-store count. A constant set here would override that
-    // width with one tuned to the fixture (whose 17 MB dir floors at 4 all
-    // the same) and wrong at any real input size.
+    // [[withStreamStatePartitions]], whose width follows the input's
+    // bytes. A constant set here would override it with a number that
+    // fits one input size and no other.
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -480,7 +470,7 @@ object Streaming {
          Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
     val changelog =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
-    withConfs(s, rocksDbConfs ++ Seq(changelog) ++ fourStatePartitions) {
+    withConfs(s, rocksDbConfs :+ changelog) {
       val ckpt = graft.util.tempDir("graft_changelog_ckpt_")
       val ev = eventsStream(s, stageSplitByTime(s, dir),
         maxFilesPerTrigger = Some(1), ntz = false)
@@ -498,31 +488,26 @@ object Streaming {
     }
   }
 
-  /** Scoped shuffle-partition override for one streaming row's execution
-    * (optimization guide §2: make partitioning scale-adaptive — derive
-    * from input size, not core count). Stateful streaming operators keep
-    * ONE state store per shuffle partition per operator and open, commit
-    * and snapshot EVERY store on EVERY micro-batch, so partitions beyond
-    * the state volume are per-batch fixed cost at any scale — measured
-    * 21.4 s → 15.7 s over 8 stateful rows at sf0.1 going 32 → 4. The
-    * width is derived from the staged input's bytes (1 partition per
-    * 32 MB, floor 4): the fixture sizes to 4, a 100 TB/day landing zone
-    * sizes to thousands — never a constant tuned for one machine. The
-    * conf is set around fn's body only: every streaming row runs its
-    * query to completion INSIDE fn (awaitTermination on AvailableNow),
-    * so the scope covers the stream and the returned memory-table read
-    * is partition-agnostic. Rows that pin [[fourStatePartitions]] nest
-    * inside this scope and restore its width on exit. Results are
-    * partitioning-independent by construction — the same rows hash-match
-    * the oracle when the driver benches at SPARK_GRAFT_CPUS=4.
+  /** Scoped shuffle width for one streaming row's execution, derived
+    * from the input's bytes by [[graft.GraftSession.width]] (one
+    * partition per 32 MB, at least one), never from the core count.
+    * Stateful streaming operators keep one state store per shuffle
+    * partition per operator and open and commit every store on every
+    * micro-batch, so partitions beyond the state volume are per-batch
+    * fixed cost at any scale. The conf is set around fn's body only:
+    * every streaming row runs its query to completion inside fn
+    * (awaitTermination on AvailableNow), so the scope covers the stream
+    * and the returned memory-table read is partition-agnostic. A
+    * restarted query keeps the width its checkpoint was started with:
+    * Spark restores `shuffle.partitions` from the offset log. Results
+    * are partitioning-independent by construction, so any width
+    * hash-matches the oracle.
     */
   private[graft] def withStreamStatePartitions(
       fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = (s, dir) => {
     // width from the TOTAL input-dir bytes (not one table): every
-    // wrapped row's state is bounded by what it reads from the dir, and
-    // a 100 TB landing zone sizes to thousands of partitions while the
-    // 17 MB fixture floors at 4.
+    // wrapped row's state is bounded by what it reads from the dir.
     //
     // Execution contract: wrapped rows run strictly sequentially on the
     // session (the bench and verify drivers are single-threaded) — the
@@ -532,14 +517,10 @@ object Streaming {
     // partitioning-agnostic; the width only shapes the stream's state
     // stores, which fn runs to completion).
     dirBytes(s, dir) match {
-      case Some(bytes) =>
-        val p = math.max(4L, bytes / (32L << 20))
-        withConfs(s, Seq("spark.sql.shuffle.partitions" -> p.toString))(fn(s, dir))
+      case Some(bytes) => withWidth(s, bytes)(fn(s, dir))
       case None =>
-        // probe failed: keep the SESSION default rather than flooring at
-        // 4 — on any storage the probe can't see, a floor-4 width would
-        // size a large input's state to 4 stores, the scale-killer this
-        // wrapper exists to prevent
+        // probe failed: keep the session width. Sizing an unknown input
+        // as if it were empty would give a large input's state one store.
         fn(s, dir)
     }
   }
@@ -550,7 +531,7 @@ object Streaming {
     * non-recursive and local-only and undercount. `None` (NOT zero) on
     * any failure, so callers fall back instead of sizing to the floor.
     */
-  private[ops] def dirBytes(s: SparkSession, dir: String): Option[Long] =
+  private[graft] def dirBytes(s: SparkSession, dir: String): Option[Long] =
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -604,16 +585,14 @@ object Streaming {
       // must equal the batch answer exactly (count + exact-cents sum).
       (s, dir) => {
         val ckpt = graft.util.tempDir("graft_statereader_ckpt_")
-        withConfs(s, fourStatePartitions) {
-          val agg = eventsStream(s, stage(s, dir, 1))
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("sum_cents"))
-          val q = agg.writeStream.outputMode("complete").format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val agg = eventsStream(s, stage(s, dir, 1))
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("sum_cents"))
+        val q = agg.writeStream.outputMode("complete").format("noop")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
         s.read.format("statestore").load(ckpt)
           .select(col("key.event_type").as("event_type"),
             col("value.count").as("n_events"),
@@ -644,11 +623,9 @@ object Streaming {
           count(lit(1)).as("n_rows"),
           sum(cents).as("sum_cents"),
           count(when(col("user_id").isNull, 1)).as("n_null_user"))
-        val q = withConfs(s, fourStatePartitions) {
-          val q0 = observed.writeStream.format("noop")
-            .trigger(Trigger.AvailableNow()).start()
-          q0.awaitTermination(); q0
-        }
+        val q = observed.writeStream.format("noop")
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
         val totals = q.recentProgress.toSeq
           .flatMap(p => Option(p.observedMetrics.get("gate")))
           .foldLeft((0L, 0L, 0L)) { (acc, r) =>
@@ -1264,7 +1241,7 @@ object Streaming {
       (s, dir) => {
         import s.implicits._
         val ckpt = graft.util.tempDir("graft_tws_reader_ckpt_")
-        withConfs(s, rocksDbConfs ++ fourStatePartitions) {
+        withConfs(s, rocksDbConfs) {
           val ev = eventsStream(s, stage(s, dir, 1))
             .select(col("user_id"), col("event_id"),
               floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
@@ -1489,20 +1466,20 @@ object Streaming {
         val streamed = graft.util.tempDir("graft_restart_src_")
         val ckpt = graft.util.tempDir("graft_restart_ckpt_")
         val outDir = graft.util.tempDir("graft_restart_out_")
+        // run 2 keeps run 1's width: Spark restores `shuffle.partitions`
+        // from the checkpoint's offset log, whatever the session says
         def runOnce(): Unit = {
-          withConfs(s, fourStatePartitions) {
-            val agg = eventsStream(s, streamed, ntz = false)
-              .withWatermark("ts", "10 minutes")
-              .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-              .agg(count(lit(1)).as("n_events"),
-                sum(floor(col("value") * 100 + lit(0.5)).cast("long")).as("sum_cents"))
-              .select(col("window.start").cast("timestamp_ntz").as("hour_start"),
-                col("event_type"), col("n_events"), col("sum_cents"))
-            val q = agg.writeStream.outputMode("append").format("parquet")
-              .option("path", outDir).option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          }
+          val agg = eventsStream(s, streamed, ntz = false)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(count(lit(1)).as("n_events"),
+              sum(floor(col("value") * 100 + lit(0.5)).cast("long")).as("sum_cents"))
+            .select(col("window.start").cast("timestamp_ntz").as("hour_start"),
+              col("event_type"), col("n_events"), col("sum_cents"))
+          val q = agg.writeStream.outputMode("append").format("parquet")
+            .option("path", outDir).option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
         }
         // run 1: only the early half exists yet
         Files.copy(Paths.get(s"$split/events_early.parquet"),

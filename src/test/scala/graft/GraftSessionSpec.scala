@@ -58,13 +58,13 @@ class GraftSessionSpec extends AnyFunSuite {
     val prior = explicit(key)
     val root = Files.createTempDirectory("graft_session_width_")
     try {
-      // 200 MB input: the wrapper sizes the stream to max(4, 200/32) = 6
+      // 200 MB input: the wrapper sizes the stream to 200 / 32 = 6
       val raf = new java.io.RandomAccessFile(root.resolve("big.bin").toFile, "rw")
       try raf.setLength(200L << 20) finally raf.close()
       var seen: Seq[Option[String]] = Nil
       val row = ops.Streaming.withStreamStatePartitions { (s, _) =>
         val outer = explicit(key)
-        val pinned = GraftSession.withConfs(s, ops.Streaming.fourStatePartitions)(explicit(key))
+        val pinned = GraftSession.withConfs(s, Seq(key -> "4"))(explicit(key))
         seen = Seq(outer, pinned, explicit(key))
         s.range(1).toDF()
       }
@@ -150,6 +150,18 @@ class GraftSessionSpec extends AnyFunSuite {
     val explicit = new SparkConf(false).set(key, "true")
     GraftExtensions.shareSessionState(explicit)
     assert(explicit.get(key) === "true")
+  }
+
+  test("source guard: the shuffle width is written only by GraftSession and the local-cluster tools") {
+    val allowed = Set(
+      "src/main/scala/graft/GraftSession.scala",
+      "src/main/scala/graft/tools/LocalClusterSmoke.scala",
+      "src/main/scala/graft/tools/ReplicaSoak.scala")
+    for (needle <- Seq("spark.sql.shuffle.partitions", "SHUFFLE_PARTITIONS")) {
+      val hits = SparkTestBase.filesContaining("src/main/scala", needle)
+      assert(hits.subsetOf(allowed),
+        s"`$needle` outside GraftSession (scope a width with GraftSession.withWidth): ${hits -- allowed}")
+    }
   }
 
   test("source guard: artifact isolation is configured only by GraftExtensions") {

@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryProgress, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
 /** Streaming semantics (SURVEY.md §5.5): watermark late-row drop via
-  * MemoryStream injection, and session-window gap boundaries.
+  * MemoryStream injection, session-window gap boundaries, restart
+  * recovery, and the input-sized state width of the stream rows.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -266,5 +267,75 @@ class StreamingSpec extends AnyFunSuite {
     // accumulates exactly v4's rows on top, no replay, no skip, no dupes
     assert(drain("99") ===
       (10L until 15L) ++ (20L until 25L) ++ (30L until 35L))
+  }
+
+  test("dirBytes: sums the files of nested directories") {
+    val root = java.nio.file.Files.createTempDirectory("graft_dirbytes_")
+    try {
+      val sub = java.nio.file.Files.createDirectories(root.resolve("t=1/part=a"))
+      java.nio.file.Files.write(root.resolve("top.bin"), Array.fill[Byte](1000)(1))
+      java.nio.file.Files.write(sub.resolve("nested.bin"), Array.fill[Byte](2345)(2))
+      assert(ops.Streaming.dirBytes(spark, root.toString) === Some(3345L),
+        "byte sum must include files below the top level")
+    } finally graft.util.deleteRecursively(root)
+  }
+
+  test("dirBytes: None (not zero) when the path cannot be probed") {
+    assert(ops.Streaming.dirBytes(spark, "/nonexistent/graft_dirbytes_nowhere").isEmpty)
+  }
+
+  private val widthKey = "spark.sql.shuffle.partitions"
+
+  /** The width a [[ops.Streaming.withStreamStatePartitions]] row sees over `dir`. */
+  private def streamWidth(dir: String): String = {
+    var seen: String = null
+    val row = ops.Streaming.withStreamStatePartitions { (s, _) =>
+      seen = s.conf.get(widthKey)
+      s.range(1).toDF()
+    }
+    row(spark, dir)
+    seen
+  }
+
+  test("withStreamStatePartitions: a failed probe keeps the session width") {
+    val prev = spark.conf.get(widthKey)
+    val seen = streamWidth("/nonexistent/graft_dirbytes_nowhere")
+    assert(seen === prev, s"unprobeable dir must keep the session width $prev, saw $seen")
+    assert(spark.conf.get(widthKey) === prev)
+  }
+
+  test("withStreamStatePartitions: sizes 1 per 32 MB, floor 1, and restores the conf") {
+    val prev = spark.conf.get(widthKey)
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_width_")
+    try {
+      val sub = java.nio.file.Files.createDirectories(root.resolve("nested"))
+      java.nio.file.Files.write(sub.resolve("small.bin"), Array.fill[Byte](1000)(1))
+      assert(streamWidth(root.toString) === "1", "a 1 kB input must size to 1 partition")
+      // 200 MB in a subdirectory: 200 / 32 = 6
+      val raf = new java.io.RandomAccessFile(sub.resolve("big.bin").toFile, "rw")
+      try raf.setLength(200L << 20) finally raf.close()
+      assert(streamWidth(root.toString) === "6", "a 200 MB input must size to 6 partitions")
+      assert(spark.conf.get(widthKey) === prev, "conf must be restored after fn")
+    } finally graft.util.deleteRecursively(root)
+  }
+
+  test("withStreamStatePartitions: a stateful aggregate over the sf0.01 fixture runs one state store") {
+    // the fixture dir holds about 1.9 MB, under one 32 MB partition, so
+    // the aggregate keeps one state store, not one per session core
+    val dir = SparkTestBase.sfDir.replace("sf0.001", "sf0.01")
+    var progress: StreamingQueryProgress = null
+    val row = ops.Streaming.withStreamStatePartitions { (s, d) =>
+      val agg = ops.Streaming.eventsStream(s, ops.Streaming.stage(s, d, 1))
+        .groupBy(col("event_type")).count()
+      val q = agg.writeStream.outputMode("complete").format("noop")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      progress = q.lastProgress
+      s.range(1).toDF()
+    }
+    row(spark, dir)
+    val stores = progress.stateOperators.toSeq
+      .map(o => (o.numShufflePartitions, o.numStateStoreInstances))
+    assert(stores === Seq((1L, 1L)), s"(partitions, state stores) per operator: $stores")
   }
 }
