@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import graft.cdc.Merge
+import graft.cdc.{Merge, Replica}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,29 +36,7 @@ object Cdc {
        |  FROM ($changesSql) c WHERE $pred) t
        |WHERE rn = 1 AND action <> 'D'""".stripMargin
 
-  /** Rows whose fn runs an eager merge/poll loop over the staged events
-    * feed — same input-size-derived scoped partition width as the
-    * streaming tier (see [[Streaming.withStreamStatePartitions]]): each
-    * poll's keyed state∪delta shuffle and replica landing is
-    * per-partition fixed cost, paid once per generation.
-    *
-    * r17 (VERDICT r16 #1): `pipeline_replica_suite` is UNWRAPPED. Its per-
-    * delivery work is dominated by the lineitem⋈orders feed join, not by
-    * keyed state landings — the r16 floor-4 width starved that join to 4
-    * tasks on 32 cores and regressed the row +18% in the driver's ring
-    * (r15 3.62 s → r16 4.26 s). The session width (AQE-coalesced per
-    * shuffle) sizes each poll's exchanges correctly at any scale;
-    * `pipeline_dap_replica`, whose polls ARE keyed state∪delta merges,
-    * keeps the wrapper (it measured 3.2 → 2.7 with it).
-    */
-  private val pollLoopRows = Set("pipeline_dap_replica")
-
-  val defs: Seq[Q] = rawDefs.map(q =>
-    if (pollLoopRows(q.name))
-      q.copy(fn = Streaming.withStreamStatePartitions(q.fn))
-    else q)
-
-  private def rawDefs: Seq[Q] = Seq(
+  val defs: Seq[Q] = Seq(
     Q(
       "cdc_schema_evolution_feed",
       // Mid-stream schema evolution (round-11): the replica's ALTER TABLE
@@ -507,25 +485,24 @@ object Cdc {
     Q(
       "pipeline_dap_replica",
       // The reference's E1/E2 lifecycle END-TO-END as one row (SURVEY.md
-      // §3.1): the change feed is serialized into three gzip JSONL envelope
-      // batches ({key,value,meta} — the DAP wire shape), then a poll loop
-      // replays them: read envelope → flatten → gate on the persisted
-      // cursor (only rows past the last-synced position) → Merge.applyDelta
-      // → LAND the replica to parquet → cursor.advance. Batch 1 is
-      // delivered TWICE: the cursor gate makes the re-delivery a no-op, the
-      // crash-recovery contract (advance only after land) the whole design
-      // hinges on. Final answer = snapshot view of the last landed replica,
-      // so the oracle (one-shot window fold of the whole feed) checks the
-      // COMPOSED semantics: envelope round-trip, cursor arithmetic,
-      // incremental fold, tombstone handling.
-      // Scale: each iteration is one keyed shuffle of state∪delta (state
-      // side pre-bucketed at real scale); landing truncates lineage so N
-      // polls never stack N windows; driver touches two scalars per batch
-      // (cursor position, batch max-ts) — never data.
+      // §3.1): the change feed is serialized into three gzip JSONL
+      // envelope deliveries ({key,value,meta} — the DAP wire shape), one
+      // per {since, until} window, then replayed through one Replica:
+      // read envelope → flatten → Replica.poll (delivery gate on the
+      // stored cursor → Merge.applyDelta → land the next parquet version
+      // → cursor advance). Delivery 1 arrives TWICE: its until is at the
+      // cursor, so the re-delivery is skipped without a job — the
+      // advance-after-land contract the design hinges on. The answer is
+      // the snapshot of the last landed version, so the oracle (one-shot
+      // window fold of the whole feed) checks the COMPOSED semantics:
+      // envelope round-trip, delivery gate, incremental fold, tombstones.
+      // Scale: each poll is one keyed shuffle of state∪delta sized from
+      // the state's bytes; landing truncates lineage so N polls never
+      // stack N windows; the driver touches one scalar per poll (the
+      // cursor), never data.
       (s, dir) => {
         import org.apache.spark.sql.types._
         val scratch = graft.util.tempDir("graft_dap_")
-        val cursor = new graft.cdc.Cursor(s"$scratch/cursor")
         // micros since epoch carried IN the envelope meta — integers
         // round-trip JSON exactly; ts_ns div 1000 matches Tables.events'
         // micro truncation so the rebuilt ts equals the oracle's
@@ -538,13 +515,12 @@ object Cdc {
         def us(date: String): Long =
           java.time.LocalDate.parse(date).atStartOfDay
             .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
-        val (t1, t2) = (us("2024-01-10"), us("2024-01-20"))
-        val cuts = Seq(
-          feed.filter(col("ts_us") < t1),
-          feed.filter(col("ts_us") >= t1 && col("ts_us") < t2),
-          feed.filter(col("ts_us") >= t2))
-        cuts.zipWithIndex.foreach { case (b, i) =>
-          b.select(to_json(struct(
+        // window bounds; the last window is open-ended
+        val bounds = Seq(Long.MinValue, us("2024-01-10"), us("2024-01-20"), Long.MaxValue)
+        val windows = bounds.zip(bounds.tail)
+        windows.zipWithIndex.foreach { case ((since, until), i) =>
+          feed.filter(col("ts_us") >= since && col("ts_us") < until)
+            .select(to_json(struct(
               struct(col("user_id")).as("key"),
               struct(col("value"), col("event_id")).as("value"),
               struct(col("action"), col("ts_us")).as("meta"))).as("line"))
@@ -559,36 +535,18 @@ object Cdc {
           StructField("meta", StructType(Seq(
             StructField("action", StringType),
             StructField("ts_us", LongType))))))
-        val stateSchema = StructType(Seq(
-          StructField("user_id", LongType), StructField("ts", TimestampNTZType),
-          StructField("action", StringType), StructField("value", DoubleType),
-          StructField("event_id", LongType)))
-        var state = s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row], stateSchema)
-        // poll sequence with batch 1 re-delivered (crash between land and
-        // the NEXT pull re-pulls the same files)
-        Seq(0, 1, 1, 2).zipWithIndex.foreach { case (b, gen) =>
-          val since = cursor.read().getOrElse(Long.MinValue)
-          val delta = s.read.schema(envelope).json(s"$scratch/batch=$b")
-            .select(col("key.user_id"), col("meta.ts_us"), col("meta.action"),
-              col("value.value"), col("value.event_id"))
-            .filter(col("ts_us") > since)
-          val hi = delta.agg(max(col("ts_us"))).head.get(0)
-          if (hi != null) { // empty re-delivery: nothing new, loop sleeps
-            val next = Merge.applyDelta(state,
-              delta.withColumn("ts",
-                  timestamp_micros(col("ts_us")).cast("timestamp_ntz"))
-                .select(stateSchema.fieldNames.map(col).toIndexedSeq: _*),
-              Seq("user_id"), "ts", "event_id")
-            next.write.mode("overwrite").parquet(s"$scratch/replica/gen=$gen")
-            // advance ONLY after the replica landed — a crash above re-pulls
-            cursor.advance(hi.asInstanceOf[Long])
-            state = s.read.parquet(s"$scratch/replica/gen=$gen")
-          }
+        val replica = new Replica(Seq("user_id"), "ts", "event_id", s"$scratch/replica")
+        // delivery 1 re-delivered (a crash between land and the NEXT pull
+        // re-pulls the same files)
+        Seq(0, 1, 1, 2).foreach { b =>
+          replica.poll(
+            s.read.schema(envelope).json(s"$scratch/batch=$b").select(
+              col("key.user_id"),
+              timestamp_micros(col("meta.ts_us")).cast("timestamp_ntz").as("ts"),
+              col("meta.action"), col("value.value"), col("value.event_id")),
+            windows(b)._2)
         }
-        Merge.snapshot(state)
-          .select(col("user_id"), col("ts"), col("action"), col("value"), col("event_id"))
-          .orderBy(col("user_id"))
+        replica.snapshot(s).orderBy(col("user_id"))
       },
       Some(foldSql("TRUE") + "\nORDER BY user_id")
     ),

@@ -66,9 +66,9 @@ object Geo {
     *    applies as density grows: eps' = eps/√K keeps the expected
     *    neighbor count — the (eps, minPts) density level-set — fixed)
     *    restores LINEAR scaling: per-point candidates stay O(1), so
-    *    ×K density costs ×K work. `graft.tools.GeoScale` measures both
-    *    for SCALE.md. Census output is grid-invariant for any cell at
-    *    fixed eps (Round14Spec pins registry == cell 450 == cell 158).
+    *    ×K density costs ×K work (SCALE.md records both measurements).
+    *    Census output is grid-invariant for any cell at fixed eps
+    *    (Round14Spec pins registry == cell 450 == cell 158).
     */
   private[graft] def dbscanCoreParam(s: org.apache.spark.sql.SparkSession,
       dir: String, epsM: Long, cellC: Int): org.apache.spark.sql.DataFrame = {
@@ -97,27 +97,6 @@ object Geo {
       |       CAST(sum(nn) AS BIGINT) AS sum_neighbors,
       |       CAST(sum(nn) * 100 AS BIGINT) / count(*) AS avg_neighbors_e2
       |FROM cls GROUP BY nn >= 3 ORDER BY is_core""".stripMargin)
-  }
-
-  /** Candidate-pair count for the same (eps, cell) configuration — the
-    * WORK metric behind the GeoScale wall-clock numbers: how many pairs
-    * survive the cell equi-join and reach the haversine.
-    */
-  private[graft] def dbscanCandidateCount(s: org.apache.spark.sql.SparkSession,
-      dir: String, epsM: Long, cellC: Int): Long = {
-    graft.Catalog.registerAll(s, dir)
-    val epsLatC = epsM / 1111.9
-    val latR = math.ceil(epsLatC / cellC).toInt
-    val lonR = math.ceil(2.0 * epsLatC / cellC).toInt
-    s.sql(ptsSqlCell(cellC) + s"""
-      |, latoffs AS (SELECT CAST(id AS BIGINT) AS o FROM range(${-latR}, ${latR + 1})),
-      |lonoffs AS (SELECT CAST(id AS BIGINT) AS o FROM range(${-lonR}, ${lonR + 1})),
-      |probes AS (
-      |  SELECT id AS qid, cla + ola.o AS jla, clo + olo.o AS jlo
-      |  FROM cells CROSS JOIN latoffs ola CROSS JOIN lonoffs olo)
-      |SELECT CAST(count(*) AS BIGINT) AS cands
-      |FROM probes p JOIN cells b ON p.jla = b.cla AND p.jlo = b.clo
-      |WHERE p.qid <> b.id""".stripMargin).collect().head.getLong(0)
   }
 
   /** Haversine (meters, floored to BIGINT) between centi-degree pairs —

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Q, Staged, util}
 import graft.GraftSession.{mountCatalog, withConfs, withWidth}
-import graft.cdc.Merge
+import graft.cdc.Replica
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
@@ -395,31 +395,6 @@ object Streaming {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     s.table(name)
-  }
-
-  /** The [[stream_dedup_rocksdb]] pipeline to a COUNT-ONLY (noop) sink.
-    * The registry row drains to a memory sink so its oracle can read the
-    * rows back, but at a ×100 stress factor that sink's driver-resident
-    * table dominates wall-clock, so a SCALE.md ratio taken on it would
-    * measure the harness, not the operator. This variant runs
-    * the IDENTICAL source → watermark → dropDuplicates chain on the
-    * RocksDB provider into `format("noop")` — rows are fully computed
-    * and counted by the sink, nothing is retained — so its wall ratio is
-    * attributable to state machinery alone. Returns rows emitted
-    * (summed from the sink's own progress metrics) for a sanity cross-
-    * check against the memory-sink run.
-    */
-  private[graft] def dedupRocksNoopSink(s: SparkSession, dir: String): Long = {
-    withConfs(s, rocksDbConfs) {
-      val ev = eventsStream(s, stage(s, dir, 2), ntz = false)
-      val dedup = ev.withWatermark("ts", "1 hour")
-        .dropDuplicates("event_id")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val q = dedup.writeStream.outputMode("append").format("noop")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.recentProgress.map(_.sink.numOutputRows).filter(_ > 0).sum
-    }
   }
 
   /** Like [[runToMemory]] but for queries that CANNOT self-terminate:
@@ -1148,35 +1123,29 @@ object Streaming {
     Q(
       "stream_foreachBatch_upsert",
       // The reference's core write path (SURVEY.md §2.9 [DAP]): each
-      // micro-batch of changes merges into a versioned parquet replica via
-      // the SAME Merge.applyDelta used in batch CDC. Two identical feed
-      // copies arrive in two batches — re-delivery of a batch leaves the
-      // replica unchanged (idempotent), which the shared oracle with
-      // cdc_apply_deletes certifies.
+      // micro-batch of changes is one delivery to a Replica, the same
+      // poll the batch replica row runs (until = batchId + 1, so a
+      // replayed batch is gated out). Two identical feed copies arrive in
+      // two batches — re-delivered ROWS leave the replica unchanged
+      // (idempotent fold), which the shared oracle with cdc_apply_deletes
+      // certifies.
       (s, dir) => {
-        val tmp = graft.util.tempDir("graft_replica_")
+        val replica = new Replica(Seq("user_id"), "ts", "event_id",
+          graft.util.tempDir("graft_replica_"))
         val ev = eventsStream(s, stage(s, dir, 2), maxFilesPerTrigger = Some(1))
         val changes = ev.select(
           col("user_id"), col("ts"),
           when(col("event_type") === "error", "D").otherwise("U").as("action"),
           col("value"), col("event_id"))
-        @volatile var version = 0
         val q = changes.writeStream.outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // the stored replica retains delete tombstones (Merge.applyDelta
-            // scaladoc); readers go through Merge.snapshot
-            val state =
-              if (version == 0) batch.limit(0)
-              else batch.sparkSession.read.parquet(s"$tmp/v$version")
-            val next = Merge.applyDelta(state, batch, Seq("user_id"), "ts", "event_id")
-            version += 1
-            next.write.mode("overwrite").parquet(s"$tmp/v$version")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            replica.poll(batch, batchId + 1)
             ()
           }
           .start()
         q.awaitTermination()
-        Merge.snapshot(s.read.parquet(s"$tmp/v$version")).orderBy(col("user_id"))
+        replica.snapshot(s).orderBy(col("user_id"))
       },
       Some("""SELECT user_id, ts, action, value, event_id FROM (
              |  SELECT user_id, ts,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.Merge
+import graft.cdc.{Merge, Replica}
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -57,6 +57,21 @@ class CdcPropertySpec extends AnyFunSuite {
         .select("user_id", "value", "event_id")
         .as[(Long, Double, Long)].collect().toSet
       assert(incremental === oneShot, s"case $i: $feed split at $cut")
+    }
+  }
+
+  test("property: any batch split through two Replica polls folds to the one-shot result") {
+    (0 until 8).foreach { i =>
+      val feed = sample(i)
+      val cut = (feed.size * (i * 13 % 101)) / 100
+      val (d1, d2) = feed.splitAt(cut)
+      val replica = new Replica(Seq("user_id"), "ts", "event_id",
+        util.tempDir("graft_replica_split_"))
+      replica.poll(toDF(d1), 1L)
+      replica.poll(toDF(d2), 2L)
+      val polled = replica.snapshot(spark).select("user_id", "value", "event_id")
+        .as[(Long, Double, Long)].collect().toSet
+      assert(polled === folded(toDF(feed)), s"case $i: $feed split at $cut")
     }
   }
 

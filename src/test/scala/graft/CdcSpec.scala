@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.Merge
+import graft.cdc.{Cursor, Merge, Replica}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,10 +24,11 @@ class CdcSpec extends AnyFunSuite {
     (3L, "2024-01-01 00:00:00", "D", 0.0, 5L),
     (3L, "2024-01-02 00:00:00", "U", 7.0, 6L))
 
+  private def rows(df: DataFrame): Set[(Long, Double, Long)] =
+    df.select("user_id", "value", "event_id").as[(Long, Double, Long)].collect().toSet
+
   private def result(df: DataFrame): Set[(Long, Double, Long)] =
-    Merge.fold(df, Seq("user_id"), "ts", "event_id")
-      .select("user_id", "value", "event_id").as[(Long, Double, Long)]
-      .collect().toSet
+    rows(Merge.fold(df, Seq("user_id"), "ts", "event_id"))
 
   test("latest upsert wins, deletes remove, re-upsert after delete survives") {
     assert(result(base) === Set((1L, 2.0, 2L), (3L, 7.0, 6L)))
@@ -85,41 +86,47 @@ class CdcSpec extends AnyFunSuite {
     assert(state.collect().toSet === after.collect().toSet)
   }
 
+  private def replica(root: String) = new Replica(Seq("user_id"), "ts", "event_id", root)
+
   test("restart idempotence: crash between land and cursor advance re-pulls safely") {
-    // the pipeline_dap_replica contract: cursor advances ONLY after the
-    // replica lands. Simulate the crash window — batch applied and landed,
-    // process dies BEFORE advance, restart re-pulls the same batch (cursor
-    // still at the old position) and applies it AGAIN on top of the landed
-    // state. Final snapshot must equal the clean single-delivery run.
-    val dir = graft.util.tempDir("graft_cdc_restart_")
-    val cursor = new graft.cdc.Cursor(s"$dir/cursor")
+    // the Replica.poll contract: the cursor advances ONLY after the
+    // version lands. Simulate the crash window — d2 lands, the process
+    // dies BEFORE the advance; a new process on the same root re-pulls d2
+    // (the cursor still says it is pending) onto the ALREADY-APPLIED
+    // version. The final snapshot must equal the clean run's.
     val d1 = base.filter($"event_id" <= 3)
     val d2 = base.filter($"event_id" > 3)
+    val clean = replica(util.tempDir("graft_cdc_clean_"))
+    assert(clean.poll(d1, 1L) && clean.poll(d2, 2L))
 
-    // poll 1: clean — land, then advance
-    val s1 = Merge.applyDelta(base.limit(0), d1, Seq("user_id"), "ts", "event_id")
-    s1.write.mode("overwrite").parquet(s"$dir/gen1")
-    cursor.advance(1L)
-
-    // poll 2: d2 lands but the process crashes before advance
-    val landed1 = spark.read.parquet(s"$dir/gen1")
-    Merge.applyDelta(landed1, d2, Seq("user_id"), "ts", "event_id")
-      .write.mode("overwrite").parquet(s"$dir/gen2")
+    val root = util.tempDir("graft_cdc_restart_")
+    val crashed = replica(root)
+    assert(crashed.poll(d1, 1L))
+    crashed.land(d2)
+    val cursor = new Cursor(s"$root/cursor")
     assert(cursor.read() === Some(1L), "crash before advance: cursor unchanged")
 
-    // restart: cursor says d2 not yet synced → re-pull d2, apply onto the
-    // ALREADY-APPLIED landed state, land, advance
-    val landed2 = spark.read.parquet(s"$dir/gen2")
-    val recovered = Merge.applyDelta(landed2, d2, Seq("user_id"), "ts", "event_id")
-    recovered.write.mode("overwrite").parquet(s"$dir/gen3")
-    cursor.advance(2L)
-
-    val clean = Merge.fold(base, Seq("user_id"), "ts", "event_id")
-      .select("user_id", "value", "event_id").as[(Long, Double, Long)].collect().toSet
-    val rec = Merge.snapshot(spark.read.parquet(s"$dir/gen3"))
-      .select("user_id", "value", "event_id").as[(Long, Double, Long)].collect().toSet
-    assert(rec === clean)
+    val restarted = replica(root)
+    assert(restarted.poll(d2, 2L), "the pending delivery is re-pulled")
     assert(cursor.read() === Some(2L))
+    assert(rows(restarted.snapshot(spark)) === rows(clean.snapshot(spark)))
+  }
+
+  test("restart: a version without its _SUCCESS marker is ignored") {
+    // a crash in the middle of a land leaves a v<N> without _SUCCESS;
+    // the replica reads and folds onto the newest COMPLETE version
+    val d1 = base.filter($"event_id" <= 3)
+    val d2 = base.filter($"event_id" > 3)
+    val root = util.tempDir("graft_cdc_torn_")
+    assert(replica(root).poll(d1, 1L))
+    val torn = java.nio.file.Paths.get(root, "v2")
+    d2.write.parquet(torn.toString)
+    java.nio.file.Files.delete(torn.resolve("_SUCCESS"))
+
+    val restarted = replica(root)
+    assert(rows(restarted.snapshot(spark)) === result(d1), "the torn v2 is not read")
+    assert(restarted.poll(d2, 2L))
+    assert(rows(restarted.snapshot(spark)) === result(base))
   }
 
   test("column diff keys are exactly the reconcile's 'changed' keys") {

@@ -36,6 +36,9 @@ object SparkTestBase {
     finally walk.close()
   }
 
+  /** The text of one source file, by its path relative to the repo root. */
+  def source(rel: String): String = Files.readString(repoRoot.resolve(rel))
+
   private def count(text: String, needle: String): Int =
     Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + needle.length))
       .takeWhile(_ >= 0).size
