@@ -35,15 +35,17 @@ import org.apache.spark.sql.graftbridge.Bridge
   * SparkContext's Hadoop conf: the builder runs it after the SparkContext
   * starts and before the session first opens a `file:` filesystem.
   *
-  * It is also where every engine session is made to share the executors'
-  * default session state ([[GraftExtensions.shareSessionState]]), so code
-  * generated for one streaming query run serves the next.
+  * It is also where the engine's SparkContext-level defaults are set
+  * ([[GraftExtensions.setContextDefaults]]): every engine session shares
+  * the executors' default session state, so code generated for one
+  * streaming query run serves the next, and broadcasts are cut into pieces
+  * small enough to stay out of G1's humongous regions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     val sc = SparkContext.getOrCreate()
     LocalFs.install(sc.hadoopConfiguration)
-    GraftExtensions.shareSessionState(Bridge.sparkConf(sc))
+    GraftExtensions.setContextDefaults(Bridge.sparkConf(sc))
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[functions.CosineSimilarity].getName, "cosine_sim"),
@@ -87,21 +89,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** Turn off Spark's per-session artifact isolation in `conf` unless it
-    * is set explicitly. With isolation on (Spark's default), every session
-    * sends its own UUID with its tasks, and the executor builds an isolated
-    * session state with a fresh classloader for each one. Every streaming
-    * query run executes on a clone of its session, so each run's tasks
-    * would load under a new classloader and miss the generated-code cache,
-    * which is keyed by classloader, and compile the same classes again.
+  /** Set the engine's SparkContext-level defaults in `conf`, each only if
+    * it is not set explicitly, so a deployment's own value wins. This runs
+    * on the running SparkContext's own conf before the engine session is
+    * built.
     *
-    * The engine adds no jars, files or other artifacts to any session, so
-    * there is nothing to isolate. A deployment that does add per-session
-    * artifacts (Spark Connect, for example) sets the key itself, and its
-    * value wins. Sessions read the key when they are built, from the
-    * SparkContext's conf as it stands then, so this runs on the running
-    * SparkContext's own conf before the engine session is built.
+    * Per-session artifact isolation is off. With isolation on (Spark's
+    * default), every session sends its own UUID with its tasks, and the
+    * executor builds an isolated session state with a fresh classloader
+    * for each one. Every streaming query run executes on a clone of its
+    * session, so each run's tasks would load under a new classloader and
+    * miss the generated-code cache, which is keyed by classloader, and
+    * compile the same classes again. The engine adds no jars, files or
+    * other artifacts to any session, so there is nothing to isolate; a
+    * deployment that does (Spark Connect, for example) sets the key itself.
+    * Sessions read the key when they are built, from the SparkContext's
+    * conf as it stands then.
+    *
+    * Broadcast pieces are 256 KB. `TorrentBroadcast` writes every
+    * broadcast (each stage's task binary, each Hadoop-conf broadcast) into
+    * a buffer whose first chunk is a whole piece, whatever the payload
+    * size. Spark's 4 MB piece is at least half a G1 region at any heap up
+    * to 8 GB, so each such chunk is a humongous object allocated straight
+    * into the old generation. A piece below half the smallest region
+    * (1 MB) never is; a broadcast above it is cut into more pieces.
+    * `TorrentBroadcast` reads the key from `SparkEnv.get.conf`, this same
+    * conf, on every broadcast.
     */
-  def shareSessionState(conf: SparkConf): Unit =
+  def setContextDefaults(conf: SparkConf): Unit = {
     conf.setIfMissing("spark.sql.artifact.isolation.enabled", "false")
+    conf.setIfMissing("spark.broadcast.blockSize", "256k")
+  }
 }

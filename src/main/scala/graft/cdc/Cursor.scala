@@ -11,7 +11,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 final class Cursor(path: String) {
 
-  /** Epoch-microsecond position, or None before the first sync. */
+  /** The last position advanced to, or None before the first sync. The
+    * unit is the caller's: epoch microseconds for a replica's `until`, a
+    * micro-batch ordinal for a streaming sink.
+    */
   def read(): Option[Long] = {
     val p = Paths.get(path)
     if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8").trim.toLong)

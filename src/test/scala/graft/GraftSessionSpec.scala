@@ -3,13 +3,15 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.SparkConf
+import org.apache.spark.graftprobe.BroadcastPieces
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[GraftSession.withConfs]] leaves the session's explicit conf exactly as
   * it found it; no registry row that scopes a conf leaks it into the next
   * row; no new hand-rolled session builder or conf restore appears
   * outside [[GraftSession]]; and engine sessions share the executors'
-  * session state unless a deployment says otherwise.
+  * session state and cut broadcasts into small pieces unless a deployment
+  * says otherwise.
   */
 class GraftSessionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -145,10 +147,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.conf.get(key) === "false")
     assert(spark.newSession().conf.get(key) === "false")
     val unset = new SparkConf(false)
-    GraftExtensions.shareSessionState(unset)
+    GraftExtensions.setContextDefaults(unset)
     assert(unset.get(key) === "false")
     val explicit = new SparkConf(false).set(key, "true")
-    GraftExtensions.shareSessionState(explicit)
+    GraftExtensions.setContextDefaults(explicit)
     assert(explicit.get(key) === "true")
   }
 
@@ -167,6 +169,32 @@ class GraftSessionSpec extends AnyFunSuite {
   test("source guard: artifact isolation is configured only by GraftExtensions") {
     val hits = SparkTestBase.filesContaining("src/main/scala", "spark.sql.artifact.isolation")
     assert(hits === Set("src/main/scala/graft/GraftExtensions.scala"),
-      s"artifact isolation set outside GraftExtensions.shareSessionState: $hits")
+      s"artifact isolation set outside GraftExtensions.setContextDefaults: $hits")
+  }
+
+  test("broadcast pieces stay below half the smallest G1 region; an explicit value wins") {
+    val key = "spark.broadcast.blockSize"
+    val sc = spark.sparkContext
+    // Spark's default is 4m, a humongous object in the 2 MB regions of a 4g heap
+    assert(sc.getConf.getSizeAsKb(key, "4m") <= 256)
+    // incompressible, so the compressed payload stays about 1.5 MB
+    val payload = new Array[Byte](1536 * 1024)
+    new scala.util.Random(13).nextBytes(payload)
+    val bc = sc.broadcast(payload)
+    try assert(BroadcastPieces.count(bc.id) > 1,
+      "a 1.5 MB broadcast in 4 MB pieces is one piece")
+    finally bc.destroy()
+    val unset = new SparkConf(false)
+    GraftExtensions.setContextDefaults(unset)
+    assert(unset.get(key) === "256k")
+    val explicit = new SparkConf(false).set(key, "4m")
+    GraftExtensions.setContextDefaults(explicit)
+    assert(explicit.get(key) === "4m")
+  }
+
+  test("source guard: the broadcast piece size is configured only by GraftExtensions") {
+    val hits = SparkTestBase.filesContaining("src/main/scala", "spark.broadcast.blockSize")
+    assert(hits === Set("src/main/scala/graft/GraftExtensions.scala"),
+      s"broadcast piece size set outside GraftExtensions.setContextDefaults: $hits")
   }
 }
